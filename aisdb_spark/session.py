@@ -27,6 +27,21 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else a quarter of physical
+    memory capped at 24g (floor 1g). A fixed 24g on a 16 GB machine let the
+    local-mode JVM grow until the kernel's OOM killer ended it; a quarter
+    leaves room for the Python workers, the page cache and tmpfs scratch."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, OSError, ValueError):  # platform without sysconf
+        return "4g"
+    return f"{min(max(phys_mb // 4, 1024), 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "transcript-timeseries",
     cpus: int | None = None,
@@ -71,7 +86,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.timestampType", "TIMESTAMP_LTZ")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # Shuffle/spill scratch on tmpfs: the sandbox's /tmp is a virtual

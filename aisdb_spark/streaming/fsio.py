@@ -64,6 +64,13 @@ def session_for(path: str) -> SparkSession | None:
     return spark
 
 
+def _remove_scratch(path: str, owner: int) -> None:
+    import shutil
+
+    if os.getpid() == owner:  # a forked child must not delete its parent's
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def scratch_dir(prefix: str) -> str:
     """Fresh scratch directory for transient tier state (streaming-drain
     tiers, upsert landings). Honors ``SPARK_GRAFT_SCRATCH``; defaults to
@@ -71,7 +78,12 @@ def scratch_dir(prefix: str) -> str:
     same justification) as ``spark.local.dir`` in session.py: this
     sandbox's /tmp is a slow virtual disk (a 1-micro-batch drain measured
     2.16 s on /tmp vs 1.64 s on tmpfs), while on a real cluster this is
-    the local-SSD scratch volume. Falls back to the platform tempdir."""
+    the local-SSD scratch volume. Falls back to the platform tempdir.
+
+    The directory is removed when the process exits, not before: callers
+    return lazy DataFrames that still read it. tmpfs is RAM, so a
+    directory left behind holds memory until reboot."""
+    import atexit
     import tempfile
 
     base = os.environ.get("SPARK_GRAFT_SCRATCH")
@@ -81,8 +93,9 @@ def scratch_dir(prefix: str) -> str:
         base = "/dev/shm/aisdb-scratch"
     if base:
         os.makedirs(base, exist_ok=True)
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
-    return tempfile.mkdtemp(prefix=prefix)
+    path = tempfile.mkdtemp(prefix=prefix, dir=base or None)
+    atexit.register(_remove_scratch, path, os.getpid())
+    return path
 
 
 def join(base: str, *names: str) -> str:

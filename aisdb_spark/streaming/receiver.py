@@ -25,7 +25,7 @@ at-most-once / no-replay (a raw TCP feed has no offsets); duplicates and
 late data are absorbed downstream by the watermark + the batch tiers'
 upsert-idempotent materialization (checkpoint.py), mirroring the
 reference's insert-time PK dedup. For replayable ingest use the landing-dir
-file stream (``rollup_stream.stream_rollup_1min``).
+file stream drain (``rollup_stream.drained_rollup_1min``).
 
 Scale note: one socket connection is one ingest point; at cluster scale
 this operator is the protocol/aggregation layer behind a real partitioned

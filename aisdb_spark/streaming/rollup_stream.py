@@ -3,11 +3,11 @@
 The reference's live path is a fixed-buffer UDP/TCP receiver flushed to the
 DB (``receiver/src/receiver.rs``, ``aisdb/receiver.py:6-57``) with **no
 event-time semantics** — late/duplicate data is absorbed by insert-time
-dedup. The Spark-first upgrade: ``readStream`` over the landing directory,
-an event-time window aggregation with a watermark bounding state, and
-``foreachBatch``/``availableNow`` for exactly-once-style batch draining
+dedup. The Spark-first upgrade: ``readStream`` over the landing directory
+and ``foreachBatch``/``availableNow`` for exactly-once-style batch draining
 (the micro-batch analog of the 128/256-message flush buffers,
-``src/lib.rs:563-568``).
+``src/lib.rs:563-568``) into a day-partitioned tier that carries mergeable
+partials, so late rows need no watermark.
 
 The streaming aggregation uses the same integer-exact measure set as the
 batch tiers INCLUDING first/last: the order-dependent measures are carried
@@ -18,20 +18,23 @@ round-1's dropped first/last). A drained stream equals the batch
 aggregation of the same input on ALL columns — tested in
 tests/test_similarity_multimodal_streaming.py.
 
-Draining (round 3): update-mode ``foreachBatch`` upserts into a
-day-partitioned parquet tier, read back after ``availableNow``
-termination — no complete-mode memory sink anywhere, so neither driver
-nor executor ever materializes the full result (the round-2 harness-only
-memory drain is gone).
+Draining: ``foreachBatch`` merges each micro-batch into a
+day-partitioned parquet tier through ``txn.merge_into_tier``, read back
+after ``availableNow`` termination — no complete-mode memory sink
+anywhere, so neither driver nor executor ever materializes the full
+result.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aisdb_spark.sources.normalize import ensure_ltz, normalize_session
+from aisdb_spark.streaming import fsio, txn
 
 # ts is declared NTZ (raw parquet micros, no session-tz reinterpretation) and
 # converted to the UTC instant by ensure_ltz — deterministic under BOTH a
@@ -46,34 +49,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def stream_rollup_1min(
-    spark: SparkSession,
-    landing_dir: str,
-    watermark: str | None = "10 minutes",
-    glob: str | None = None,
-) -> DataFrame:
-    """readStream(parquet landing dir) → per-user 1-minute windowed rollup
-    with watermark-bounded state. Integer-exact measures (value→cents).
-    ``glob`` filters file names inside the landing dir (the file stream
-    source requires a directory basePath).
-
-    ``watermark=None`` skips the watermark entirely — REQUIRED for finite
-    drains (see :func:`drained_rollup_1min`): with update output mode a
-    watermark actively drops rows older than max(ts)-horizon once the
-    drain spans multiple micro-batches (maxFilesPerTrigger, or re-draining
-    a landing dir with late files over a kept checkpoint), silently
-    diverging the tier from the batch answer. Keep a watermark only on
-    continuous pipelines, where bounding state is the point."""
-    normalize_session(spark)
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    src = ensure_ltz(reader.parquet(landing_dir))
-    if watermark is not None:
-        src = src.withWatermark("ts", watermark)
-    return rollup_measures(src)
 
 
 def rollup_measures(events: DataFrame) -> DataFrame:
@@ -109,77 +84,15 @@ def rollup_measures(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Scalable drains: update-mode foreachBatch into a day-partitioned parquet
-# tier, then read the tier back. Replaces round-2's complete-mode memory
-# sinks — state lives in the streaming state store (watermark-bounded) and
-# the output lives on disk partitioned by bucket_date, so neither the
-# driver nor any executor ever holds the whole result (the reference's
-# continuous insert loop, aisdb/receiver.py:6-57, never accumulates
-# either). Each micro-batch rewrites only the day partitions it touches
-# (dynamic partition overwrite), so per-batch cost ∝ updated keys.
+# Scalable drains: foreachBatch into a day-partitioned parquet tier, then
+# read the tier back. Replaces round-2's complete-mode memory sinks — the
+# tier itself is the cross-batch state, on disk partitioned by
+# bucket_date, so neither the driver nor any executor ever holds the whole
+# result (the reference's continuous insert loop, aisdb/receiver.py:6-57,
+# never accumulates either). Each micro-batch rewrites only the day
+# partitions it touches (dynamic partition overwrite), so per-batch cost ∝
+# updated keys.
 # ---------------------------------------------------------------------------
-
-
-def _tier_nonempty(spark: SparkSession, tier_dir: str) -> bool:
-    from aisdb_spark.streaming import fsio
-
-    return fsio.tier_nonempty(spark, tier_dir)
-
-
-def upsert_rollup_batch(
-    spark: SparkSession, batch: DataFrame, tier_dir: str,
-    epoch_id: int | None = None,
-) -> None:
-    """Replace-by-key upsert for one update-mode micro-batch of windowed
-    aggregates: each delivered (bucket_start, user_id) row is the CURRENT
-    state of that key, so the merge is delete-matching-key + insert — no
-    algebra needed (the state store already did it). Keys never change
-    their bucket_date, so dynamic overwrite of the touched days is exact.
-    Epoch replays are skipped via the tier's _epoch.json watermark; the
-    write itself is the journaled partition swap (streaming/txn.py), so a
-    crash mid-write rolls back to the pre-batch tier on the next call."""
-    from aisdb_spark.streaming import txn
-
-    txn.recover(spark, tier_dir)
-    if epoch_id is not None and epoch_id <= txn.last_applied_epoch(
-        spark, tier_dir
-    ):
-        return
-    # persist: the unpersisted foreachBatch frame would re-run the whole
-    # micro-batch aggregation on every downstream action (dates collect,
-    # anti-join, write) — persist keeps per-batch cost ∝ updated keys
-    new = batch.withColumn("bucket_date", F.to_date("bucket_start")).persist()
-    try:
-        # one job returns the touched dates AND the batch row count — the
-        # count sizes the swap's output files (txn.swap_commit rows_hint)
-        by_date = new.groupBy("bucket_date").count().collect()
-        dates = [r["bucket_date"] for r in by_date]
-        if not dates:
-            return
-        out = new
-        out_rows = sum(r["count"] for r in by_date)
-        if _tier_nonempty(spark, tier_dir):
-            existing = spark.read.parquet(tier_dir).filter(
-                F.col("bucket_date").isin(dates)  # partition-pruned scan
-            )
-            keep = existing.join(
-                new.select("bucket_start", "user_id"),
-                on=["bucket_start", "user_id"],
-                how="left_anti",
-            )
-            # materialize BEFORE the swap: the plan reads the partitions
-            # swap_commit renames away (first-batch writes have no
-            # self-read and skip the double materialization)
-            out = keep.unionByName(new).localCheckpoint(eager=True)
-            # exact output size for the swap's write sizing — a cheap
-            # scan of the just-checkpointed blocks, not a recompute
-            out_rows = out.count()
-        txn.swap_commit(
-            spark, tier_dir, out, dates, epoch_id=epoch_id,
-            rows_hint=out_rows,
-        )
-    finally:
-        new.unpersist()
 
 
 _ROLLUP_TIER_COLS = [
@@ -279,47 +192,13 @@ def upsert_rollup_partials_batch(
     matters at scale). Epoch replays are skipped via ``_epoch.json``; the
     write is the journaled partition swap (streaming/txn.py), so a crash
     mid-write rolls back to the pre-batch tier on the next call."""
-    from aisdb_spark.streaming import txn
-
-    txn.recover(spark, tier_dir)
-    if epoch_id is not None and epoch_id <= txn.last_applied_epoch(
-        spark, tier_dir
-    ):
-        return
-    newp = rollup_partials_events(events_batch).withColumn(
-        "bucket_date", F.to_date("bucket_start")
-    ).persist()
-    try:
-        # one job returns the touched dates AND the batch row count — the
-        # count sizes the swap's output files (txn.swap_commit rows_hint)
-        by_date = newp.groupBy("bucket_date").count().collect()
-        dates = [r["bucket_date"] for r in by_date]
-        if not dates:
-            return
-        merged = newp
-        merged_rows = sum(r["count"] for r in by_date)
-        if _tier_nonempty(spark, tier_dir):
-            existing = spark.read.parquet(tier_dir).filter(
-                F.col("bucket_date").isin(dates)  # partition-pruned scan
-            )
-            merged = merge_rollup_partials(
-                existing.unionByName(newp).select(
-                    "bucket_start", "user_id", *_ROLLUP_PARTIAL_COLS
-                )
-            ).withColumn("bucket_date", F.to_date("bucket_start"))
-            # materialize BEFORE the swap: the plan reads the partitions
-            # swap_commit renames away (first-batch writes skip the
-            # double materialization)
-            merged = merged.localCheckpoint(eager=True)
-            # exact output size for the swap's write sizing — a cheap
-            # scan of the just-checkpointed blocks, not a recompute
-            merged_rows = merged.count()
-        txn.swap_commit(
-            spark, tier_dir, merged, dates, epoch_id=epoch_id,
-            rows_hint=merged_rows,
-        )
-    finally:
-        newp.unpersist()
+    day = F.to_date("bucket_start")
+    txn.merge_into_tier(
+        spark, tier_dir,
+        rollup_partials_events(events_batch).withColumn("bucket_date", day),
+        lambda parts: merge_rollup_partials(parts).withColumn("bucket_date", day),
+        epoch_id=epoch_id,
+    )
 
 
 def drained_rollup_1min(
@@ -340,11 +219,7 @@ def drained_rollup_1min(
     3x SLOWER than local[8]. Algebraic partial merge pays batch-agg +
     touched-partition merge only, needs no watermark to be lossless for
     arbitrarily late rows, and per-batch cost ∝ updated keys + touched
-    partitions (measured, same file). The native watermarked update-mode
-    operator (:func:`stream_rollup_1min` + :func:`upsert_rollup_batch`)
-    remains the continuous-pipeline path, pytest-covered."""
-    from aisdb_spark.streaming import fsio
-
+    partitions (measured, same file)."""
     normalize_session(spark)
     base = out_base or fsio.scratch_dir("spark_stream_rollup_")
     tier, ck = f"{base}/tier", f"{base}/ck"
@@ -481,8 +356,6 @@ def _session_horizon_days(spark: SparkSession, tier_dir: str) -> int:
     Reference precedent: the reference's correctness never rests on a
     side file — the PK absorbs everything
     (aisdb/aisdb_sql/insert_dynamic_clusteredidx.sql:16)."""
-    from aisdb_spark.streaming import fsio
-
     doc = fsio.read_side_json(spark, tier_dir, "_horizon.json")
     if doc is not None:
         try:
@@ -508,8 +381,6 @@ def _session_horizon_days(spark: SparkSession, tier_dir: str) -> int:
 
 
 def _record_session_horizon(spark: SparkSession, tier_dir: str, days: int) -> None:
-    from aisdb_spark.streaming import fsio
-
     fsio.write_side_json_atomic(
         spark, tier_dir, "_horizon.json", {"max_span_days": days}
     )
@@ -543,85 +414,39 @@ def upsert_sessions_batch(
     (no filesystem-specific cleanup pass), and a crash mid-write rolls
     back to the pre-batch tier on the next call. Per-batch cost ∝ batch
     sessions + existing sessions of the touched days; never table-sized."""
-    import datetime as dt
+    start_day = F.to_date("session_start")
 
-    from aisdb_spark.streaming import txn
-
-    txn.recover(spark, tier_dir)
-    if epoch_id is not None and epoch_id <= txn.last_applied_epoch(
-        spark, tier_dir
-    ):
-        return
-    # persist: 2-3 actions below (dates collect, merge+write, out_dates
-    # collect) would each re-run the upstream sessionization otherwise
-    new = partials.persist()
-    try:
-        # every day each partial CROSSES (start..end sequence, not just the
-        # endpoints): an existing session stored under an intermediate day
-        # must be read too, or a long partial could silently duplicate it
-        batch_dates = {
-            r[0]
-            for r in new.select(
-                F.explode(
-                    F.sequence(
-                        F.to_date("session_start"), F.to_date("session_end")
-                    )
-                )
-            )
-            .distinct()
-            .collect()
-        }
-        if not batch_dates:
-            return
+    def window(days):
+        # every day each partial CROSSES (the ``days`` sequence below, not
+        # just its endpoints) widened by the horizon: an existing session
+        # stored under any of these days may merge with the batch
         horizon = _session_horizon_days(spark, tier_dir)
-        read_dates = sorted(
-            {
-                d + dt.timedelta(days=off)
-                for d in batch_dates
-                for off in range(-horizon - 1, 2)
-            }
+        read_days = sorted(
+            {d + dt.timedelta(days=off) for d in days for off in range(-horizon - 1, 2)}
         )
-        merged = new.select(*_SESSION_TIER_COLS)
-        had_tier = _tier_nonempty(spark, tier_dir)
-        if had_tier:
-            existing = spark.read.parquet(tier_dir).filter(
-                F.col("bucket_date").isin(read_dates)  # partition-pruned scan
-            )
-            merged = merge_session_partials(
-                existing.select(*_SESSION_TIER_COLS).unionByName(merged)
-            )
-        out = merged.withColumn("bucket_date", F.to_date("session_start"))
-        # materialize BEFORE the swap: the plan reads the partitions
-        # swap_commit renames away (and the span stat below is a second
-        # action on the same frame)
-        if had_tier:
-            out = out.localCheckpoint(eager=True)
-        else:
-            out = out.persist()
-        stats = out.agg(
-            F.max(
-                F.datediff(
-                    F.to_date("session_end"), F.to_date("session_start")
-                )
-            ).alias("span"),
-            # rides the span job for free: sizes the swap's output files
-            F.count(F.lit(1)).alias("rows"),
-        ).first()
-        max_span = int(stats["span"] or 0)
-        if max_span > horizon:  # widen BEFORE the write (over-estimate safe)
-            _record_session_horizon(spark, tier_dir, max_span)
-        # swap dates = the read window: out dates ⊆ read dates (a merged
-        # session's start comes from a read partition or the batch, and
-        # batch dates sit inside the window), so the journal covers every
-        # partition this commit may clear or write
-        txn.swap_commit(
-            spark, tier_dir, out, read_dates, epoch_id=epoch_id,
-            rows_hint=int(stats["rows"] or 0),
-        )
-        if not had_tier:
-            out.unpersist()
-    finally:
-        new.unpersist()
+
+        def settle(out):
+            stats = out.agg(
+                F.max(F.datediff(F.to_date("session_end"), start_day)).alias("span"),
+                # rides the span job for free: sizes the swap's output files
+                F.count(F.lit(1)).alias("rows"),
+            ).first()
+            if int(stats["span"] or 0) > horizon:  # widen BEFORE the write
+                _record_session_horizon(spark, tier_dir, int(stats["span"]))
+            return int(stats["rows"] or 0)
+
+        # swap days = the read window: out days ⊆ read days (a merged
+        # session's start comes from a read partition or the batch), so
+        # the journal covers every partition this commit may clear or write
+        return read_days, settle
+
+    txn.merge_into_tier(
+        spark, tier_dir,
+        partials.select(*_SESSION_TIER_COLS).withColumn("bucket_date", start_day),
+        lambda u: merge_session_partials(u).withColumn("bucket_date", start_day),
+        epoch_id=epoch_id, window=window,
+        days=F.explode(F.sequence(start_day, F.to_date("session_end"))),
+    )
 
 
 _SESSION_TIER_COLS = [
@@ -647,8 +472,6 @@ def drained_user_sessions(
     not driver memory; the native session_window operator remains
     :func:`stream_user_sessions` for continuous pipelines, append-mode
     pytest-covered."""
-    from aisdb_spark.streaming import fsio
-
     normalize_session(spark)
     base = out_base or fsio.scratch_dir("spark_stream_sess_")
     tier, ck = f"{base}/tier", f"{base}/ck"

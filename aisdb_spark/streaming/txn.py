@@ -37,6 +37,12 @@ re-running a crashed recovery re-arbitrates identically. With
 the committed flag itself is the commit point: a crash after the write
 but before the flip rolls the batch back — at-most-once, documented.
 
+Every streaming tier writer (``upsert.upsert_batch``,
+``rollup_stream.upsert_rollup_partials_batch``,
+``rollup_stream.upsert_sessions_batch``) commits through
+:func:`merge_into_tier`, which owns the recover → epoch-skip → merge →
+materialize → swap order; the writers supply only their rows and merge.
+
 Scale: the journal lists touched dates only (∝ batch, never table),
 the swap is rename-only, and recovery touches only journaled
 partitions. Reference parity: AISdb's tables absorb replayed inserts
@@ -49,7 +55,8 @@ single-commit path where the runtime jar exists.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from aisdb_spark.streaming import fsio
 
@@ -93,6 +100,12 @@ def record_epoch(
     if pending_refresh:
         payload["pending_refresh"] = [d.isoformat() for d in pending_refresh]
     fsio.write_side_json_atomic(spark, tier_dir, "_epoch.json", payload)
+
+
+def clear_pending_refresh(spark: SparkSession, tier_dir: str) -> None:
+    """Re-record the applied epoch without its pending-refresh days, once
+    the coarser refresh they owed has completed."""
+    record_epoch(spark, tier_dir, last_applied_epoch(spark, tier_dir))
 
 
 def _restore_partition(spark: SparkSession, tier_dir: str, d: str,
@@ -211,8 +224,6 @@ def swap_commit(
     # same placement). ``rows_hint`` should be the OUTPUT row count when
     # the caller has it cheaply (post-localCheckpoint count); callers
     # that cannot hint fall back to bytes-only sizing.
-    from pyspark.sql import functions as F
-
     n_dates = max(len(dates), 1)
     rows = int(rows_hint or 0)
     desired_tasks = min(-(-rows // 250_000), 2 * spark.sparkContext.defaultParallelism)
@@ -245,3 +256,79 @@ def swap_commit(
     )
     fsio.delete_dir(spark, f"{tier_dir}/{BACKUP}")
     fsio.delete_side_json(spark, tier_dir, JOURNAL)
+
+
+def merge_into_tier(
+    spark: SparkSession,
+    tier_dir: str,
+    new: DataFrame,
+    merge,
+    epoch_id: int | None = None,
+    pending_refresh: bool = False,
+    days: Column | None = None,
+    window=None,
+) -> list:
+    """Merge one micro-batch into the day-partitioned tier at ``tier_dir``
+    under the journaled swap — the one skeleton every streaming tier
+    writer shares. Returns the touched days ([] when the batch is empty
+    or its epoch was already applied).
+
+    ``new`` holds the batch's rows in tier layout, ``bucket_date``
+    included; ``merge(existing ∪ new)`` re-aggregates them with the tier
+    rows of the days read and must return tier rows with ``bucket_date``.
+    ``days`` is the per-row expression of the days a row touches (default
+    ``bucket_date``). ``window(days)`` optionally returns ``(read_days,
+    settle)``: the days to read and swap (a superset of ``days``), and
+    ``settle(out) -> rows``, run on the materialized output before the
+    swap in place of the row count (it may record side state the next
+    batch's window depends on). ``pending_refresh=True`` records the
+    touched days as owing a coarser-tier refresh with the epoch.
+
+    The ordering rules live here and nowhere else:
+
+    1. :func:`recover` settles any crashed prior swap before anything
+       reads the tier or its epoch;
+    2. an epoch at or below the recorded one is skipped — the
+       idempotent-apply half of the effectively-once contract;
+    3. ``new`` is persisted, so the days job and the merge/write do not
+       re-run the upstream aggregation; the days job also counts the
+       batch rows, which size the swap's output files when there is no
+       existing tier to merge;
+    4. the merge reads only the window's partitions (partition-pruned)
+       and is materialized BEFORE :func:`swap_commit`, whose step 2
+       renames exactly those partitions away (and overwrite lineage must
+       not read its own target); the row count of the checkpointed
+       blocks is a cheap scan, not a recompute. A first batch has no
+       self-read and skips the double materialization."""
+    recover(spark, tier_dir)
+    if epoch_id is not None and epoch_id <= last_applied_epoch(spark, tier_dir):
+        return []
+    new = new.persist()
+    try:
+        by_day = (
+            new.select((F.col("bucket_date") if days is None else days).alias("d"))
+            .groupBy("d").count().collect()
+        )
+        dates = [r["d"] for r in by_day]
+        if not dates:
+            return []
+        read_dates, settle = window(dates) if window else (dates, None)
+        out, rows = new, sum(r["count"] for r in by_day)
+        had_tier = fsio.tier_nonempty(spark, tier_dir)
+        if had_tier:
+            existing = spark.read.parquet(tier_dir).filter(
+                F.col("bucket_date").isin(read_dates)  # partition-pruned scan
+            )
+            out = merge(existing.unionByName(new)).localCheckpoint(eager=True)
+        if settle:
+            rows = settle(out)
+        elif had_tier:
+            rows = out.count()
+        swap_commit(
+            spark, tier_dir, out, read_dates, epoch_id=epoch_id,
+            pending_refresh=dates if pending_refresh else None,
+            rows_hint=rows,
+        )
+        return dates
+    finally:
+        new.unpersist()

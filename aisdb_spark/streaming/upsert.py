@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aisdb_spark.streaming import fsio, txn
+from aisdb_spark.streaming import txn
 
 PARTIAL_COLS = [
     "n_turns",
@@ -113,48 +113,13 @@ def upsert_batch(
     ``pending_refresh=True`` (cascade caller) records the affected days as
     owing a coarser-tier refresh alongside the epoch, so a crash before
     the refresh completes is replayed instead of silently skipped."""
-    txn.recover(spark, tier_dir)  # settle any crashed prior swap first
-    if epoch_id is not None and epoch_id <= txn.last_applied_epoch(spark, tier_dir):
-        return []
-    # persist: dates collect + merge/write would re-aggregate the raw
-    # micro-batch twice otherwise (round-4 ADVICE fix)
-    newp = partial_1min(turns).withColumn(
-        "bucket_date", F.to_date("bucket_start")
-    ).persist()
-    try:
-        # one job returns the touched dates AND the batch row count — the
-        # count sizes the swap's output files (txn.swap_commit rows_hint)
-        by_date = newp.groupBy("bucket_date").count().collect()
-        dates = [r["bucket_date"] for r in by_date]
-        if not dates:
-            return []
-        merged = newp
-        merged_rows = sum(r["count"] for r in by_date)
-        if fsio.tier_nonempty(spark, tier_dir):
-            existing = spark.read.parquet(tier_dir).filter(
-                F.col("bucket_date").isin(dates)  # partition-pruned scan
-            )
-            merged = merge_partials(
-                existing.unionByName(newp).select(
-                    "conv_id", "bucket_start", *PARTIAL_COLS
-                )
-            ).withColumn("bucket_date", F.to_date("bucket_start"))
-            # materialize BEFORE the swap: the plan reads the partitions
-            # swap_commit renames away (and overwrite lineage must not
-            # read its own target); first-batch writes skip the double
-            # materialization
-            merged = merged.localCheckpoint(eager=True)
-            # exact output size for the swap's write sizing — a cheap
-            # scan of the just-checkpointed blocks, not a recompute
-            merged_rows = merged.count()
-        txn.swap_commit(
-            spark, tier_dir, merged, dates, epoch_id=epoch_id,
-            pending_refresh=dates if pending_refresh else None,
-            rows_hint=merged_rows,
-        )
-        return dates
-    finally:
-        newp.unpersist()
+    day = F.to_date("bucket_start")
+    return txn.merge_into_tier(
+        spark, tier_dir,
+        partial_1min(turns).withColumn("bucket_date", day),
+        lambda parts: merge_partials(parts).withColumn("bucket_date", day),
+        epoch_id=epoch_id, pending_refresh=pending_refresh,
+    )
 
 
 def stream_upsert_1min(
@@ -258,24 +223,15 @@ def upsert_batch_cascade(
     last time) or re-runs JUST the idempotent refresh for the recorded
     days — the 1h/1d tiers can no longer be left permanently stale by a
     crash between the epoch record and the refresh."""
-    txn.recover(spark, tier_1min_dir)  # settle any crashed prior swap
-    if epoch_id is not None and epoch_id <= txn.last_applied_epoch(
-        spark, tier_1min_dir
-    ):
-        owed = txn.pending_refresh_dates(spark, tier_1min_dir)
-        if owed:
-            refresh_coarser(spark, tier_1min_dir, coarser_dirs, owed)
-            txn.record_epoch(
-                spark, tier_1min_dir,
-                txn.last_applied_epoch(spark, tier_1min_dir),
-            )
-        return len(owed)
     dates = upsert_batch(
         spark, turns, tier_1min_dir, epoch_id=epoch_id, pending_refresh=True
     )
+    if epoch_id is not None and not dates:
+        # skipped replay: finish the refresh a crash left owed, if any
+        dates = txn.pending_refresh_dates(spark, tier_1min_dir)
     refresh_coarser(spark, tier_1min_dir, coarser_dirs, dates)
     if epoch_id is not None and dates:
-        txn.record_epoch(spark, tier_1min_dir, epoch_id)  # clears pending
+        txn.clear_pending_refresh(spark, tier_1min_dir)
     return len(dates)
 
 

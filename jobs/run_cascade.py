@@ -1,5 +1,6 @@
 """spark-submit entry point: the full retention pipeline as a cluster job.
 
+    python -c "from aisdb_spark.dist import package_zip; package_zip()"
     spark-submit --master <cluster> --py-files dist/aisdb_spark.zip \
         jobs/run_cascade.py --input /data/sf0.1 --output /data/tiers
 

@@ -1,5 +1,6 @@
 """spark-submit entry point: incremental landing-dir → tier upsert stream.
 
+    python -c "from aisdb_spark.dist import package_zip; package_zip()"
     spark-submit --master <cluster> --py-files dist/aisdb_spark.zip \
         jobs/run_upsert_stream.py --landing /data/landing \
         --tiers /data/tiers --checkpoint /data/ck [--once]

@@ -142,3 +142,26 @@ def test_has_scheme_single_slash_uris():
     assert fsio.has_scheme("file:///tmp/x")
     assert not fsio.has_scheme("/plain/local/path")
     assert not fsio.has_scheme("relative/path")
+
+
+def test_scratch_dirs_removed_at_exit(tmp_path):
+    """Every scratch dir a process takes is gone once it exits, contents
+    included — they sit on tmpfs by default, which is RAM."""
+    import subprocess
+    import sys
+
+    base = tmp_path / "scratch"
+    code = (
+        "from aisdb_spark.streaming import fsio\n"
+        "for p in ('a_', 'b_'):\n"
+        "    d = fsio.scratch_dir(p)\n"
+        "    open(d + '/part.parquet', 'w').write('x')\n"
+        "    print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        env={**os.environ, "SPARK_GRAFT_SCRATCH": str(base)},
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.split()
+    assert len(out) == 2 and all(p.startswith(str(base)) for p in out)
+    assert os.listdir(base) == []

@@ -102,43 +102,6 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
     assert batch.exceptAll(streamed).count() == 0
 
 
-def test_upsert_rollup_batch_replaces_keys(spark, tmp_path):
-    """Update-mode semantics: a later batch's row for an existing
-    (bucket_start, user_id) key REPLACES the stored row (the state store
-    already merged; the tier must not re-aggregate), and untouched keys
-    survive. Simulates two update-mode deliveries by hand."""
-    from aisdb_spark.streaming import rollup_stream
-
-    tier = str(tmp_path / "tier")
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").cache()
-    half = rollup_stream.rollup_measures(ev.filter(F.col("event_id") % 2 == 0))
-    full = rollup_stream.rollup_measures(ev)
-    rollup_stream.upsert_rollup_batch(spark, half, tier, epoch_id=0)
-    # second delivery: the CURRENT state of every key the odd half touches
-    touched = (
-        ev.filter(F.col("event_id") % 2 == 1)
-        .select(
-            F.date_trunc("minute", "ts").alias("bucket_start"), "user_id"
-        )
-        .distinct()
-    )
-    rollup_stream.upsert_rollup_batch(
-        spark, full.join(touched, ["bucket_start", "user_id"]), tier, epoch_id=1
-    )
-    got = spark.read.parquet(tier).select(*rollup_stream._ROLLUP_TIER_COLS)
-    # keys never touched by odd events keep their half-batch row; all other
-    # keys must equal the full aggregate → union of both, keyed replacement
-    exp = full.join(touched, ["bucket_start", "user_id"]).unionByName(
-        half.join(touched, ["bucket_start", "user_id"], "left_anti")
-    ).select(*rollup_stream._ROLLUP_TIER_COLS)
-    assert got.exceptAll(exp).count() == 0
-    assert exp.exceptAll(got).count() == 0
-    # replayed epoch is a no-op
-    rollup_stream.upsert_rollup_batch(spark, half, tier, epoch_id=1)
-    again = spark.read.parquet(tier).select(*rollup_stream._ROLLUP_TIER_COLS)
-    assert again.exceptAll(exp).count() == 0 and exp.exceptAll(again).count() == 0
-
-
 def test_upsert_sessions_batch_merge_moves_partition(spark, tmp_path):
     """A late partial that merges a session back into the previous day
     must relocate the merged row AND drop the emptied bucket_date

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from aisdb_spark.streaming import rollup_stream
@@ -188,110 +189,181 @@ def test_upsert_sessions_merge_moves_partition_file_uri(spark, tmp_path):
     assert spark.read.parquet(tier).count() == 1
 
 
-def test_swap_commit_crash_windows_converge(spark, tmp_path, monkeypatch):
-    """Hypothesis over random session sets, micro-batch splits, and a crash
-    point injected into the second drain (round-4 verdict item 7):
+# crash points per tier writer: every writer commits through
+# txn.merge_into_tier, so ``backup`` and ``epoch`` apply to all of them;
+# ``horizon`` is the sessions writer's own side record
+_CRASH_MATRIX = [
+    (writer, point)
+    for writer, points in (
+        ("cascade", ("backup", "epoch")),
+        ("partials", ("backup", "epoch")),
+        ("sessions", ("backup", "epoch", "horizon")),
+    )
+    for point in points
+]
 
-    - ``horizon``: crash between _record_session_horizon and the tier
-      write — the widened horizon is an over-estimate, which only widens
-      reads;
+
+def _crash_case(spark, writer, evts, base, tmp):
+    """(apply(wave, epoch), check()) for one writer over hypothesis events
+    ``(entity, 15-min slot, wave)``; ``check`` asserts the tier(s) equal
+    the one-shot batch answer over all events."""
+    from aisdb_spark.operators import rollup
+    from aisdb_spark.streaming import upsert
+
+    tier = str(tmp / "tier")
+    ts = [base + dt.timedelta(minutes=15 * slot) for _, slot, _ in evts]
+
+    def same(got, whole):
+        assert got.exceptAll(whole).count() == 0
+        assert whole.exceptAll(got).count() == 0
+
+    if writer == "cascade":
+        # turn_idx follows ts within a conversation (the transcripts
+        # invariant tier_from_finer relies on); integral values keep the
+        # double sums exact under any merge order
+        order = sorted(range(len(evts)), key=lambda i: (evts[i][0], ts[i], i))
+        turn_idx = {i: k for k, i in enumerate(order)}
+        tv = spark.createDataFrame(
+            [
+                (f"c{c}", turn_idx[i], ts[i], float(i % 5) - 2.0, wave)
+                for i, (c, _, wave) in enumerate(evts)
+            ],
+            "conv_id string, turn_idx int, ts timestamp, value double, wave int",
+        )
+        dirs = {"1h": str(tmp / "t1h"), "1d": str(tmp / "t1d")}
+
+        def apply(w, epoch):
+            upsert.upsert_batch_cascade(
+                spark, tv.filter(F.col("wave") == w), tier, dirs, epoch_id=epoch
+            )
+
+        def check():
+            exp_1m = rollup.temporal_bin(tv, "minute")
+            exp_1h = rollup.tier_from_finer(exp_1m, "hour")
+            same(upsert.read_tier_public(spark, tier), exp_1m)
+            for unit, exp in (("1h", exp_1h), ("1d", rollup.tier_from_finer(exp_1h, "day"))):
+                same(spark.read.parquet(dirs[unit]).drop("bucket_date"), exp)
+
+        return apply, check
+    ev = spark.createDataFrame(
+        [(i, u, ts[i], float(i) * 0.37 - 1.0, wave) for i, (u, _, wave) in enumerate(evts)],
+        "event_id long, user_id long, ts timestamp, value double, wave int",
+    )
+    if writer == "partials":
+        def apply(w, epoch):
+            rollup_stream.upsert_rollup_partials_batch(
+                spark, ev.filter(F.col("wave") == w), tier, epoch_id=epoch
+            )
+
+        def check():
+            got = spark.read.parquet(tier).select(*rollup_stream._ROLLUP_TIER_COLS)
+            same(got, rollup_stream.rollup_measures(ev))
+
+        return apply, check
+
+    def apply(w, epoch):
+        rollup_stream.upsert_sessions_batch(
+            spark, rollup_stream.sessionize_events(ev.filter(F.col("wave") == w)),
+            tier, epoch_id=epoch,
+        )
+
+    def check():
+        got = spark.read.parquet(tier).select(*rollup_stream._SESSION_TIER_COLS)
+        same(got, rollup_stream.sessionize_events(ev))
+
+    return apply, check
+
+
+@pytest.mark.parametrize("writer,crash_point", _CRASH_MATRIX)
+def test_swap_commit_crash_windows_converge(
+    spark, tmp_path, monkeypatch, writer, crash_point
+):
+    """Hypothesis over random event sets and micro-batch splits, with a
+    crash injected into the second drain of every tier writer (the 1min
+    upsert cascade with its 1h/1d refresh, the events-partials drain, the
+    sessions drain) at each window of the journaled commit:
+
     - ``backup``: crash mid-journal, after the first partition rename into
       _txn_backup — recovery must rename the backups home;
     - ``epoch``: crash between the tier write and the epoch record — THE
       window rounds 1-4 documented as open on the parquet path; the
-      journaled swap closes it by rolling the write back.
+      journaled swap closes it by rolling the write back;
+    - ``horizon`` (sessions): crash between _record_session_horizon and
+      the tier write (the first wave leaves no ``_horizon.json`` at these
+      spans, so the second one re-derives and records it from the tier) —
+      a recorded horizon is an over-estimate, which only widens reads.
 
     After the crash, the same epoch is re-drained (what a checkpointed
-    source does) and the tier must equal the one-shot batch sessionization
-    of all events — no duplicate, no loss, every time."""
+    source does) and every tier must equal the one-shot batch answer over
+    all events — no duplicate, no loss, every time."""
+    import itertools
+    import os
+
     from hypothesis import HealthCheck, assume, given, settings, strategies as st
 
     from aisdb_spark.streaming import fsio, txn
 
     base = dt.datetime(2025, 3, 1, 22, 0)  # 2h before a day boundary
-    counter = {"n": 0}
+    examples = itertools.count()
+    _real_rename = fsio.rename
+    _real_horizon = rollup_stream._record_session_horizon
 
     def crash_after_first_rename(s, src, dst):
         out = _real_rename(s, src, dst)
         if "_txn_backup" in dst:  # crash right after a backup rename lands
-            counter["n"] += 1
-            if counter["n"] >= 1:
-                raise RuntimeError("injected crash mid-backup")
+            raise RuntimeError("injected crash mid-backup")
         return out
 
-    _real_rename = fsio.rename
-    _real_record = txn.record_epoch
-    _real_horizon = rollup_stream._record_session_horizon
+    def crash_before_epoch(s, t, e, pending_refresh=None):
+        raise RuntimeError("injected crash before epoch record")
+
+    def crash_after_horizon(s, t, d):
+        _real_horizon(s, t, d)
+        raise RuntimeError("injected crash after horizon record")
+
+    inject = {
+        "backup": (fsio, "rename", crash_after_first_rename),
+        "epoch": (txn, "record_epoch", crash_before_epoch),
+        "horizon": (rollup_stream, "_record_session_horizon", crash_after_horizon),
+    }[crash_point]
 
     @settings(
-        max_examples=6, deadline=None,
+        max_examples=3, deadline=None,
         suppress_health_check=[HealthCheck.too_slow],
     )
     @given(
-        st.lists(  # (user, 15-min slot, wave assignment)
+        st.lists(  # (entity, 15-min slot, wave assignment)
             st.tuples(st.integers(0, 1), st.integers(0, 24), st.integers(0, 1)),
             min_size=2, max_size=10, unique=True,
-        ),
-        st.sampled_from(["horizon", "backup", "epoch"]),
+        )
     )
-    def run(evts, crash_point):
+    def run(evts):
         # both waves must carry events or the injected step never runs
         assume({w for _, _, w in evts} == {0, 1})
-        tmp = tmp_path / f"t{abs(hash((tuple(evts), crash_point)))}"
-        tier = str(tmp / "tier")
-        rows = [
-            (i, u, base + dt.timedelta(minutes=15 * slot), 1.0, wave)
-            for i, (u, slot, wave) in enumerate(evts)
-        ]
-        ev = spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp, value double,"
-            " wave int"
-        )
-        waves = [
-            rollup_stream.sessionize_events(ev.filter(F.col("wave") == w))
-            for w in range(2)
-        ]
-        rollup_stream.upsert_sessions_batch(spark, waves[0], tier, epoch_id=0)
-        # inject the crash into the second drain
-        counter["n"] = 0
+        if writer != "sessions":
+            # the second wave must rewrite a day the first one wrote, or
+            # there is no partition to back up (the sessions writer's read
+            # window always covers both days)
+            def days(w):
+                return {
+                    (base + dt.timedelta(minutes=15 * slot)).date()
+                    for _, slot, wave in evts if wave == w
+                }
+            assume(days(0) & days(1))
+        tmp = tmp_path / f"ex{next(examples)}"
+        apply, check = _crash_case(spark, writer, evts, base, tmp)
+        apply(0, 0)
+        monkeypatch.setattr(*inject)
         try:
-            if crash_point == "horizon":
-                def crash(s, t, d):
-                    _real_horizon(s, t, d)
-                    raise RuntimeError("injected crash after horizon record")
-                monkeypatch.setattr(
-                    rollup_stream, "_record_session_horizon", crash
-                )
-            elif crash_point == "backup":
-                monkeypatch.setattr(fsio, "rename", crash_after_first_rename)
-            else:  # epoch: tier write done, epoch record dies
-                def crash(s, t, e, pending_refresh=None):
-                    raise RuntimeError("injected crash before epoch record")
-                monkeypatch.setattr(txn, "record_epoch", crash)
-            try:
-                rollup_stream.upsert_sessions_batch(
-                    spark, waves[1], tier, epoch_id=1
-                )
-                crashed = crash_point == "horizon" and False
-            except RuntimeError:
-                crashed = True
-            if crash_point != "horizon":
-                assert crashed, "injection did not fire"
+            with pytest.raises(RuntimeError, match="injected crash"):
+                apply(1, 1)
         finally:
-            monkeypatch.setattr(fsio, "rename", _real_rename)
-            monkeypatch.setattr(txn, "record_epoch", _real_record)
-            monkeypatch.setattr(
-                rollup_stream, "_record_session_horizon", _real_horizon
-            )
+            monkeypatch.undo()
         # the checkpointed source replays the same epoch after restart
-        rollup_stream.upsert_sessions_batch(spark, waves[1], tier, epoch_id=1)
-        got = spark.read.parquet(tier).select(*rollup_stream._SESSION_TIER_COLS)
-        whole = rollup_stream.sessionize_events(ev)
-        assert got.exceptAll(whole).count() == 0
-        assert whole.exceptAll(got).count() == 0
+        apply(1, 1)
+        check()
         # journal and backups fully settled
-        import os
-
+        tier = str(tmp / "tier")
         assert not os.path.exists(f"{tier}/{txn.JOURNAL}")
         assert not os.path.exists(f"{tier}/{txn.BACKUP}")
 
