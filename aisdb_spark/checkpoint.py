@@ -149,11 +149,12 @@ def write_tier(
         w = writer.write.mode("overwrite").partitionBy("bucket_date")
     else:
         w = df.write.mode("overwrite")
-    w.parquet(tier_dir)
+    from aisdb_spark.streaming import fsio
+
+    fsio.gated_write(w).parquet(tier_dir)
     elapsed = time.monotonic() - t0
     spark = df.sparkSession
     out_rows = obs.get["rows"]
-    from aisdb_spark.streaming import fsio
 
     nbytes = sum(
         sz for p, sz in fsio.walk_files(spark, tier_dir) if p.endswith(".parquet")

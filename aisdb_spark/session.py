@@ -97,20 +97,6 @@ def get_spark(
             "spark.local.dir",
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
         )
-        # FileOutputCommitter v2: task output renames directly into the
-        # destination instead of a second, serial job-commit rename pass
-        # on the driver (measured: warm cascade 2.77 → 2.34 s; the win is
-        # per-file commit cost, so it grows with file count at scale).
-        # Safe here because every tier/drain write is gated by a
-        # higher-level protocol — checkpoint manifests and the txn.py
-        # swap journal decide validity, not _SUCCESS markers — so v2's
-        # weaker job-commit atomicity (visible partials on mid-job
-        # failure) cannot be observed by readers. Object-store deployments
-        # would use their own committer (env-overridable).
-        .config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-            os.environ.get("SPARK_GRAFT_COMMITTER_V", "2"),
-        )
     )
     if os.environ.get("SPARK_GRAFT_PRELOAD", "1") != "0":
         # Preload numpy/pandas/pyarrow in the worker daemon so forked

@@ -76,16 +76,6 @@ def brute_force_topk(
     return out.orderBy(F.col("cos").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def brute_force_topk_oracle(query: list[float], k: int = 10,
-                            exclude_vec_id: int | None = 0) -> str:
-    q = _vec_literal(query, duck=True)
-    cos = cosine_expr("embedding", q, duck=True)
-    where = f"WHERE vec_id != {exclude_vec_id}" if exclude_vec_id is not None else ""
-    return f"""SELECT vec_id, label, {cos} AS cos
-FROM embeddings {where}
-ORDER BY cos DESC, vec_id ASC LIMIT {k}"""
-
-
 def hyperplanes(dim: int = 64, n_planes: int = 8, seed: int = 42) -> np.ndarray:
     """Deterministic random hyperplanes (seeded) for sign-bucket LSH."""
     rng = np.random.default_rng(seed)

@@ -107,6 +107,24 @@ def join(base: str, *names: str) -> str:
     return out
 
 
+def gated_write(writer):
+    """``writer`` (a ``DataFrameWriter``) set to FileOutputCommitter v2:
+    task output renames straight into the destination instead of a second,
+    serial job-commit rename pass on the driver (measured: warm cascade
+    2.77 → 2.34 s; the win is per-file commit cost, so it grows with file
+    count at scale). v2's weaker job-commit atomicity (visible partials on
+    mid-job failure) is safe ONLY for writes whose visibility a higher
+    protocol decides — the ``txn.swap_commit`` journal and the
+    ``checkpoint.write_tier`` manifest — so those are the only callers; an
+    ungated write (CSV staging) keeps the session's v1 default.
+    ``$SPARK_GRAFT_COMMITTER_V`` overrides the version (object-store
+    deployments use their own committer)."""
+    return writer.option(
+        "mapreduce.fileoutputcommitter.algorithm.version",
+        os.environ.get("SPARK_GRAFT_COMMITTER_V", "2"),
+    )
+
+
 def read_side_json(spark: SparkSession, tier_dir: str, name: str):
     """Parse ``{tier_dir}/{name}`` as JSON; None if missing/unreadable."""
     if not has_scheme(tier_dir):

@@ -339,12 +339,15 @@ def merge_session_partials(parts: DataFrame) -> DataFrame:
     )
 
 
-def _session_horizon_days(spark: SparkSession, tier_dir: str) -> int:
+def _session_horizon_days(spark: SparkSession, tier_dir: str) -> int | None:
     """ceil(max session span in the tier, in days) — the read-back horizon.
-    Maintained in ``_horizon.json`` beside the tier; defaults to 1 (the
-    watermark-like assumption) and widens adaptively the moment a longer
-    merged session is about to be written, so a >24 h session can never be
-    silently split across read windows (round-3 verdict item 3).
+    Maintained in ``_horizon.json`` beside the tier; the first write
+    records it (at least 1 day, the watermark-like assumption) and it
+    widens adaptively the moment a longer merged session is about to be
+    written, so a >24 h session can never be silently split across read
+    windows (round-3 verdict item 3). None when nothing is recorded and
+    the tier is empty: the caller reads with 1 and records the horizon
+    with its first write.
 
     The side file is a CACHE, not a correctness dependency (round-4
     verdict item 1): if it is missing or corrupt over a NON-empty tier,
@@ -377,7 +380,7 @@ def _session_horizon_days(spark: SparkSession, tier_dir: str) -> int:
         days = max(1, int(span or 0))
         _record_session_horizon(spark, tier_dir, days)
         return days
-    return 1
+    return None
 
 
 def _record_session_horizon(spark: SparkSession, tier_dir: str, days: int) -> None:
@@ -403,9 +406,10 @@ def upsert_sessions_batch(
     merge gap) before a batch day. The touched days — derived from BOTH
     session_start and session_end dates, so multi-day partials count
     every day they cross — are read back ``[-H-1, +1]`` where ``H`` is
-    the tier's recorded max session span in days (``_horizon.json``,
-    default 1; widened adaptively BEFORE any write that would exceed it,
-    crash-safe because an over-estimate only widens reads). Mergeability
+    the tier's recorded max session span in days (``_horizon.json``, at
+    least 1, recorded with the first write and widened adaptively BEFORE
+    any write that would exceed it, crash-safe because an over-estimate
+    only widens reads). Mergeability
     with a merged run equals mergeability with one of its pieces, so the
     window is exact — no session is ever silently split or duplicated,
     regardless of span. The write is the journaled partition swap
@@ -420,7 +424,8 @@ def upsert_sessions_batch(
         # every day each partial CROSSES (the ``days`` sequence below, not
         # just its endpoints) widened by the horizon: an existing session
         # stored under any of these days may merge with the batch
-        horizon = _session_horizon_days(spark, tier_dir)
+        recorded = _session_horizon_days(spark, tier_dir)
+        horizon = recorded or 1
         read_days = sorted(
             {d + dt.timedelta(days=off) for d in days for off in range(-horizon - 1, 2)}
         )
@@ -431,8 +436,10 @@ def upsert_sessions_batch(
                 # rides the span job for free: sizes the swap's output files
                 F.count(F.lit(1)).alias("rows"),
             ).first()
-            if int(stats["span"] or 0) > horizon:  # widen BEFORE the write
-                _record_session_horizon(spark, tier_dir, int(stats["span"]))
+            span = int(stats["span"] or 0)
+            # record the first horizon, or widen it, BEFORE the write
+            if recorded is None or span > horizon:
+                _record_session_horizon(spark, tier_dir, max(span, horizon))
             return int(stats["rows"] or 0)
 
         # swap days = the read window: out days ⊆ read days (a merged

@@ -42,6 +42,12 @@ Every streaming tier writer (``upsert.upsert_batch``,
 ``rollup_stream.upsert_sessions_batch``) commits through
 :func:`merge_into_tier`, which owns the recover → epoch-skip → merge →
 materialize → swap order; the writers supply only their rows and merge.
+The cascade's 1h/1d tiers are no exception: ``upsert.refresh_coarser``
+derives them from the materialized 1min rows inside the 1min merge's
+``settle`` hook and commits each with :func:`recover` + :func:`swap_commit`
+under the same epoch, before the 1min swap — so the 1min epoch record is
+the one commit point of the whole cascade, and a replay re-swaps whole
+coarse days idempotently.
 
 Scale: the journal lists touched dates only (∝ batch, never table),
 the swap is rename-only, and recovery touches only journaled
@@ -72,40 +78,11 @@ def last_applied_epoch(spark: SparkSession, tier_dir: str) -> int:
         return -1
 
 
-def pending_refresh_dates(spark: SparkSession, tier_dir: str) -> list:
-    """Days whose coarser-tier refresh was recorded as owed but not yet
-    completed (crash between the 1min epoch record and the 1h/1d refresh —
-    round-4 ADVICE fix: without this marker a replayed epoch returned
-    dates=[] and the coarser tiers stayed stale forever)."""
-    import datetime as dt
-
-    doc = fsio.read_side_json(spark, tier_dir, "_epoch.json") or {}
-    try:
-        return [dt.date.fromisoformat(d) for d in doc.get("pending_refresh", [])]
-    except (TypeError, ValueError):
-        return []
-
-
-def record_epoch(
-    spark: SparkSession, tier_dir: str, epoch_id: int,
-    pending_refresh: list | None = None,
-) -> None:
-    """Atomically (tmp + rename) record the applied epoch beside the tier.
-    ``pending_refresh`` marks days still owing a coarser-tier refresh; the
-    cascade records them WITH the epoch and clears them (a second record
-    with pending_refresh=None) only after the refresh completes — the
-    refresh itself is idempotent (recomputed from the 1min tier), so a
-    replay re-running it is safe."""
-    payload: dict = {"last_epoch": epoch_id}
-    if pending_refresh:
-        payload["pending_refresh"] = [d.isoformat() for d in pending_refresh]
-    fsio.write_side_json_atomic(spark, tier_dir, "_epoch.json", payload)
-
-
-def clear_pending_refresh(spark: SparkSession, tier_dir: str) -> None:
-    """Re-record the applied epoch without its pending-refresh days, once
-    the coarser refresh they owed has completed."""
-    record_epoch(spark, tier_dir, last_applied_epoch(spark, tier_dir))
+def record_epoch(spark: SparkSession, tier_dir: str, epoch_id: int) -> None:
+    """Atomically (tmp + rename) record the applied epoch beside the tier."""
+    fsio.write_side_json_atomic(
+        spark, tier_dir, "_epoch.json", {"last_epoch": epoch_id}
+    )
 
 
 def _restore_partition(spark: SparkSession, tier_dir: str, d: str,
@@ -169,7 +146,6 @@ def swap_commit(
     out: DataFrame,
     dates,
     epoch_id: int | None = None,
-    pending_refresh: list | None = None,
     rows_hint: int | None = None,
 ) -> None:
     """Steps 1-5 above. ``out`` must carry a ``bucket_date`` column whose
@@ -236,7 +212,7 @@ def swap_commit(
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in out.columns]), F.lit(k))
     out = out.repartition(n_dates * k, F.col("bucket_date"), salt)
     (
-        out.write.mode("overwrite")
+        fsio.gated_write(out.write.mode("overwrite"))
         # write-scoped dynamic overwrite: only partitions present in `out`
         # are written; the session conf stays untouched (a session-level
         # set would silently change later static overwrites)
@@ -245,7 +221,7 @@ def swap_commit(
         .parquet(tier_dir)
     )
     if epoch_id is not None:
-        record_epoch(spark, tier_dir, epoch_id, pending_refresh)
+        record_epoch(spark, tier_dir, epoch_id)
     # flip the journal to committed BEFORE deleting backups: from here any
     # crash is arbitrated as "finish cleanup", never rollback — without
     # this flag a crash between the two deletes below left an orphaned
@@ -264,7 +240,6 @@ def merge_into_tier(
     new: DataFrame,
     merge,
     epoch_id: int | None = None,
-    pending_refresh: bool = False,
     days: Column | None = None,
     window=None,
 ) -> list:
@@ -280,9 +255,11 @@ def merge_into_tier(
     ``bucket_date``). ``window(days)`` optionally returns ``(read_days,
     settle)``: the days to read and swap (a superset of ``days``), and
     ``settle(out) -> rows``, run on the materialized output before the
-    swap in place of the row count (it may record side state the next
-    batch's window depends on). ``pending_refresh=True`` records the
-    touched days as owing a coarser-tier refresh with the epoch.
+    swap in place of the row count. It may record side state the next
+    batch's window depends on, or commit tiers derived from ``out`` (the
+    cascade's 1h/1d): anything it commits lands before this tier's epoch
+    record, so a crash rolls this tier back and the replay runs ``settle``
+    again on the same ``out`` — its commits must be idempotent per epoch.
 
     The ordering rules live here and nowhere else:
 
@@ -325,9 +302,7 @@ def merge_into_tier(
         elif had_tier:
             rows = out.count()
         swap_commit(
-            spark, tier_dir, out, read_dates, epoch_id=epoch_id,
-            pending_refresh=dates if pending_refresh else None,
-            rows_hint=rows,
+            spark, tier_dir, out, read_dates, epoch_id=epoch_id, rows_hint=rows,
         )
         return dates
     finally:

@@ -20,18 +20,24 @@ equivalent implemented here:
   the last applied micro-batch epoch in ``_epoch.json`` so a replayed
   epoch (crash after tier write, before checkpoint commit) is skipped
   idempotently. The guarantee is at-least-once delivery + idempotent
-  apply — effectively-once for the tier. Rounds 1-4 documented one
-  residual window (a crash between the tier write finishing and the
-  ``_epoch.json`` rename left a half-applied batch the replay would
-  double-count); round 5 closed it with the journaled partition-swap
-  commit in ``streaming/txn.py`` — touched partitions are renamed to a
-  backup under a write-ahead journal, the epoch record is the atomic
-  commit point, and :func:`txn.recover` rolls an uncommitted write back
-  to the exact pre-batch tier so the source's replay applies cleanly.
+  apply — effectively-once for the tier. Every write is the journaled
+  partition swap of ``streaming/txn.py``: touched partitions are renamed
+  to a backup under a write-ahead journal, the epoch record is the atomic
+  commit point, and :func:`txn.recover` rolls an uncommitted write back to
+  the exact pre-batch tier so the source's replay applies cleanly.
   ``sources/iceberg.upsert_batch_iceberg`` remains the single-commit
   transactional path where the runtime jar exists (gated, exercised by
   tests/test_iceberg_gate.py). The reference's PK-dedup contract maps to
   "a (conv_id, turn_idx) turn is applied once".
+
+The cascade (1min → 1h → 1d, TimescaleDB's continuous aggregates) has one
+commit path: the 1h/1d rows of the touched days are derived from the
+merged, materialized 1min rows of those days — exact, because a day holds
+every hour and minute in it — and swapped in under the same epoch BEFORE
+the 1min swap. The 1min epoch record is therefore the cascade's only
+commit point: a crash before it rolls the 1min tier back and the replay
+rebuilds the same 1min rows and re-swaps the same whole coarse days; a
+crash after it owes nothing.
 
 Invariant (tested): after draining ANY split of the input into micro-batch
 files — including late files that revisit old buckets — the stored tier is
@@ -51,6 +57,7 @@ from pyspark.sql import functions as F
 
 from aisdb_spark.streaming import txn
 
+# the public measures first (read_tier_public), then the merge state
 PARTIAL_COLS = [
     "n_turns",
     "sum_value",
@@ -101,7 +108,7 @@ def upsert_batch(
     turns: DataFrame,
     tier_dir: str,
     epoch_id: int | None = None,
-    pending_refresh: bool = False,
+    coarser_dirs: dict[str, str] | None = None,
 ) -> list:
     """Merge one batch of raw turns into the partial-1min tier at
     ``tier_dir`` (day-partitioned parquet). Returns the affected days.
@@ -109,16 +116,22 @@ def upsert_batch(
     When ``epoch_id`` is given (the foreachBatch micro-batch id, strictly
     increasing per checkpoint), an epoch at or below the tier's recorded
     ``_epoch.json`` watermark is skipped — the idempotent-apply half of
-    the effectively-once contract (see module docstring).
-    ``pending_refresh=True`` (cascade caller) records the affected days as
-    owing a coarser-tier refresh alongside the epoch, so a crash before
-    the refresh completes is replayed instead of silently skipped."""
+    the effectively-once contract (see module docstring). With
+    ``coarser_dirs`` (``{"1h": dir, "1d": dir}``, either optional) the
+    affected days of those tiers are rebuilt from the merged 1min rows by
+    :func:`refresh_coarser` and committed before the 1min tier."""
     day = F.to_date("bucket_start")
+    window = None
+    if coarser_dirs:
+        def window(dates):
+            return dates, lambda out: refresh_coarser(
+                spark, out, coarser_dirs, dates, epoch_id
+            )
     return txn.merge_into_tier(
         spark, tier_dir,
         partial_1min(turns).withColumn("bucket_date", day),
         lambda parts: merge_partials(parts).withColumn("bucket_date", day),
-        epoch_id=epoch_id, pending_refresh=pending_refresh,
+        epoch_id=epoch_id, window=window,
     )
 
 
@@ -135,9 +148,8 @@ def stream_upsert_1min(
     the tier's ``_epoch.json`` watermark make resume effectively-once:
     already-processed files are skipped by the source and a replayed
     micro-batch (crash between tier write and checkpoint commit) is
-    skipped by the epoch guard, so a killed run re-converges to identical
-    bytes — modulo the narrow commit window documented in the module
-    docstring."""
+    skipped by the epoch guard, and a write cut short is rolled back by
+    the journaled swap, so a killed run re-converges to the same rows."""
     from aisdb_spark.sources.normalize import ensure_ltz, normalize_session
 
     normalize_session(spark)
@@ -160,50 +172,35 @@ def stream_upsert_1min(
 
 def refresh_coarser(
     spark: SparkSession,
-    tier_1min_dir: str,
+    out: DataFrame,
     coarser_dirs: dict[str, str],
     dates: list,
-) -> None:
-    """Incremental continuous-aggregate refresh: recompute the 1h/1d rows
-    of ONLY the affected days from the upserted 1min tier and
-    dynamic-partition-overwrite them. A day is self-contained for every
-    coarser unit (day ⊇ hour ⊇ minute), so refreshing whole affected days
-    is exact; cost ∝ touched days, not table size. TimescaleDB's
-    ``refresh_continuous_aggregate(window)`` expressed in Spark."""
+    epoch_id: int | None = None,
+) -> int:
+    """Incremental continuous-aggregate refresh: derive the 1h/1d rows of
+    ``dates`` from ``out`` — the materialized, merged 1min rows of exactly
+    those days — and commit each tier with the journaled swap under
+    ``epoch_id``. A day is self-contained for every coarser unit (day ⊇
+    hour ⊇ minute), so rebuilding whole affected days is exact and
+    re-swapping them on a replay is idempotent; cost ∝ touched days, not
+    table size. TimescaleDB's ``refresh_continuous_aggregate(window)``
+    expressed in Spark. Returns the 1min row count, which sizes the 1min
+    swap's output files (the ``settle`` contract of
+    :func:`txn.merge_into_tier`)."""
     from aisdb_spark.operators import rollup
 
-    if not dates:
-        return
-    public = read_tier_public(spark, tier_1min_dir).filter(
-        F.to_date("bucket_start").isin(dates)
-    )
-    upstream = public
-    for unit, out_dir in (("hour", coarser_dirs.get("1h")), ("day", coarser_dirs.get("1d"))):
-        if out_dir is None:
-            continue
-        tier = rollup.tier_from_finer(upstream, unit).withColumn(
-            "bucket_date", F.to_date("bucket_start")
-        )
-        tier = tier.localCheckpoint(eager=True)
-        # date-clustered write: file count = dates × k, not partitions ×
-        # dates; k SIZE-derived like txn.swap_commit/checkpoint.write_tier
-        # (~1M rows per file per date, floor 1). The count is a cheap read
-        # of the just-checkpointed blocks, not a recompute.
-        n_rows = tier.count()
-        k = max(1, -(-n_rows // (1_000_000 * max(len(dates), 1))))
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in tier.columns]), F.lit(k)
-        )
-        (
-            tier.repartition(
-                max(len(dates), 1) * k, F.col("bucket_date"), salt
+    upstream = out
+    for unit, name in (("hour", "1h"), ("day", "1d")):
+        upstream = rollup.tier_from_finer(upstream, unit)
+        tier_dir = coarser_dirs.get(name)
+        if tier_dir:
+            txn.recover(spark, tier_dir)
+            txn.swap_commit(
+                spark, tier_dir,
+                upstream.withColumn("bucket_date", F.to_date("bucket_start")),
+                dates, epoch_id=epoch_id,
             )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket_date")
-            .parquet(out_dir)
-        )
-        upstream = tier.drop("bucket_date")
+    return out.count()
 
 
 def upsert_batch_cascade(
@@ -213,37 +210,18 @@ def upsert_batch_cascade(
     coarser_dirs: dict[str, str],
     epoch_id: int | None = None,
 ) -> int:
-    """One micro-batch: upsert the 1min tier, then refresh the coarser
-    tiers for the affected days only.  Returns affected-day count.
+    """One micro-batch through the whole cascade: merge the 1min tier and
+    rebuild the 1h/1d tiers for the affected days only. Returns the
+    affected-day count (0 for an empty batch or an already-applied epoch).
 
-    Crash safety (round-4 ADVICE fix): the 1min upsert records the
-    affected days as ``pending_refresh`` atomically WITH its epoch, and
-    the marker is cleared only after the coarser refresh completes. A
-    replayed epoch therefore either skips everything (refresh finished
-    last time) or re-runs JUST the idempotent refresh for the recorded
-    days — the 1h/1d tiers can no longer be left permanently stale by a
-    crash between the epoch record and the refresh."""
-    dates = upsert_batch(
-        spark, turns, tier_1min_dir, epoch_id=epoch_id, pending_refresh=True
-    )
-    if epoch_id is not None and not dates:
-        # skipped replay: finish the refresh a crash left owed, if any
-        dates = txn.pending_refresh_dates(spark, tier_1min_dir)
-    refresh_coarser(spark, tier_1min_dir, coarser_dirs, dates)
-    if epoch_id is not None and dates:
-        txn.clear_pending_refresh(spark, tier_1min_dir)
-    return len(dates)
+    Commit order: 1h, then 1d, then 1min — each a journaled swap under the
+    same epoch, so the 1min epoch record is the single commit point (module
+    docstring). A replayed epoch at or below it is skipped whole."""
+    return len(upsert_batch(spark, turns, tier_1min_dir, epoch_id, coarser_dirs))
 
 
 def read_tier_public(spark: SparkSession, tier_dir: str) -> DataFrame:
     """The tier's public rollup surface (drops the merge-state columns)."""
     return spark.read.parquet(tier_dir).select(
-        "conv_id",
-        "bucket_start",
-        "n_turns",
-        "sum_value",
-        "min_value",
-        "max_value",
-        "first_value",
-        "last_value",
+        "conv_id", "bucket_start", *PARTIAL_COLS[:6]
     )

@@ -123,20 +123,6 @@ def minhash_from_hashes(duck: bool, hashes_expr: str) -> list[str]:
     return out
 
 
-def minhash_sig_exprs(duck: bool, tokens_expr: str) -> list[str]:
-    """Back-compat single-expression form (hash hoisting inlined per perm
-    when used via with_minhash/oracles, which pass a hash column)."""
-    return minhash_from_hashes(duck, shingle_hash_expr(duck, tokens_expr))
-
-
-def token_hash_expr(duck: bool, tokens_expr: str) -> str:
-    """List of H(token) — hoisted so the md5 kernel runs once per token,
-    not once per (token, bit)."""
-    d = dialect(duck)
-    h = d["H"].format(s="t")
-    return d["lmap"].format(l=tokens_expr, lam=f"t -> {h}")
-
-
 def simhash_from_hashes(duck: bool, hashes_expr: str) -> str:
     """60-bit SimHash from precomputed token hashes (multiplicity counts).
 
@@ -256,16 +242,6 @@ _SHINGLE_LIST_EXPR = (
     "ELSE CAST(array() AS ARRAY<STRING>) END)[0]"
 )
 _SHINGLE_SET_EXPR = f"array_distinct({_SHINGLE_LIST_EXPR})"
-
-
-def shingle_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) rows — explode of the per-row shingle list (the
-    expression pipeline tokenizes once per document; see
-    ``_SHINGLE_HASHES_EXPR``). Kept for callers that genuinely need the
-    row form; the signature/set paths below stay un-exploded."""
-    return _spread_scan(docs).select(
-        "doc_id", F.explode(F.expr(_SHINGLE_LIST_EXPR)).alias("shingle")
-    )
 
 
 def with_minhash(docs: DataFrame) -> DataFrame:

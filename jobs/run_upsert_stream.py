@@ -6,13 +6,14 @@
         --tiers /data/tiers --checkpoint /data/ck [--once]
 
 Drains new raw-turn parquet files from the landing directory through the
-``foreachBatch`` upsert into the mergeable-partial 1min tier, then
-refreshes 1h/1d for the affected days only (streaming/upsert.py).
-``--once`` uses availableNow (drain-and-exit — cron-able); without it the
-stream runs continuously with a processingTime trigger. A killed run
-resumes from the checkpoint with no missed files and with replayed
-micro-batches skipped by the tier's epoch watermark (effectively-once;
-see streaming/upsert.py for the one narrow crash window) — the
+``foreachBatch`` upsert into the mergeable-partial 1min tier, with the
+1h/1d rows of the affected days derived from the merged 1min rows and
+committed first (streaming/upsert.py). ``--once`` uses availableNow
+(drain-and-exit — cron-able); without it the stream runs continuously
+with a processingTime trigger. A killed run resumes from the checkpoint
+with no missed files: a micro-batch cut short is rolled back by the
+journaled swap and replayed, and a committed one is skipped by the 1min
+tier's epoch record (effectively-once; streaming/txn.py) — the
 deployment surface of the late-data path (reference precedent: the
 receiver's continuous insert loop, ``aisdb/receiver.py:6-57``, with
 PK-absorbed late data, ``aisdb/database/decoder.py:199-259``).

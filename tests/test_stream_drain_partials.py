@@ -191,16 +191,22 @@ def test_upsert_sessions_merge_moves_partition_file_uri(spark, tmp_path):
 
 # crash points per tier writer: every writer commits through
 # txn.merge_into_tier, so ``backup`` and ``epoch`` apply to all of them;
-# ``horizon`` is the sessions writer's own side record
+# ``horizon`` is the sessions writer's own side record. The cascade
+# commits three tiers, 1h, then 1d, then 1min, each through the journaled
+# swap; each of its cases aims the crash at one tier's directory
+# (``cascade`` is the 1min tier, the cascade's commit point)
 _CRASH_MATRIX = [
     (writer, point)
     for writer, points in (
         ("cascade", ("backup", "epoch")),
+        ("cascade-1h", ("backup", "epoch")),
+        ("cascade-1d", ("backup", "epoch")),
         ("partials", ("backup", "epoch")),
         ("sessions", ("backup", "epoch", "horizon")),
     )
     for point in points
 ]
+_CRASH_DIR = {"cascade-1h": "t1h", "cascade-1d": "t1d"}  # else "tier"
 
 
 def _crash_case(spark, writer, evts, base, tmp):
@@ -217,7 +223,7 @@ def _crash_case(spark, writer, evts, base, tmp):
         assert got.exceptAll(whole).count() == 0
         assert whole.exceptAll(got).count() == 0
 
-    if writer == "cascade":
+    if writer.startswith("cascade"):
         # turn_idx follows ts within a conversation (the transcripts
         # invariant tier_from_finer relies on); integral values keep the
         # double sums exact under any merge order
@@ -279,9 +285,9 @@ def test_swap_commit_crash_windows_converge(
     spark, tmp_path, monkeypatch, writer, crash_point
 ):
     """Hypothesis over random event sets and micro-batch splits, with a
-    crash injected into the second drain of every tier writer (the 1min
-    upsert cascade with its 1h/1d refresh, the events-partials drain, the
-    sessions drain) at each window of the journaled commit:
+    crash injected into the second drain of every tier writer (the upsert
+    cascade at each of its 1h, 1d and 1min commits, the events-partials
+    drain, the sessions drain) at each window of the journaled commit:
 
     - ``backup``: crash mid-journal, after the first partition rename into
       _txn_backup — recovery must rename the backups home;
@@ -289,13 +295,13 @@ def test_swap_commit_crash_windows_converge(
       window rounds 1-4 documented as open on the parquet path; the
       journaled swap closes it by rolling the write back;
     - ``horizon`` (sessions): crash between _record_session_horizon and
-      the tier write (the first wave leaves no ``_horizon.json`` at these
-      spans, so the second one re-derives and records it from the tier) —
-      a recorded horizon is an over-estimate, which only widens reads.
+      the tier write of the FIRST drain, the one that records the horizon
+      — a recorded horizon is an over-estimate, which only widens reads.
 
     After the crash, the same epoch is re-drained (what a checkpointed
     source does) and every tier must equal the one-shot batch answer over
-    all events — no duplicate, no loss, every time."""
+    all events — no duplicate, no loss, every time. A further replay of
+    the committed epoch must leave every file as it is."""
     import itertools
     import os
 
@@ -306,16 +312,20 @@ def test_swap_commit_crash_windows_converge(
     base = dt.datetime(2025, 3, 1, 22, 0)  # 2h before a day boundary
     examples = itertools.count()
     _real_rename = fsio.rename
+    _real_epoch = txn.record_epoch
     _real_horizon = rollup_stream._record_session_horizon
+    target = {}  # the crashed tier's directory, per example
 
     def crash_after_first_rename(s, src, dst):
         out = _real_rename(s, src, dst)
-        if "_txn_backup" in dst:  # crash right after a backup rename lands
-            raise RuntimeError("injected crash mid-backup")
+        if dst.startswith(f"{target['dir']}/{txn.BACKUP}/"):
+            raise RuntimeError("injected crash mid-backup")  # rename landed
         return out
 
-    def crash_before_epoch(s, t, e, pending_refresh=None):
-        raise RuntimeError("injected crash before epoch record")
+    def crash_before_epoch(s, t, e):
+        if t == target["dir"]:
+            raise RuntimeError("injected crash before epoch record")
+        return _real_epoch(s, t, e)
 
     def crash_after_horizon(s, t, d):
         _real_horizon(s, t, d)
@@ -351,21 +361,38 @@ def test_swap_commit_crash_windows_converge(
                 }
             assume(days(0) & days(1))
         tmp = tmp_path / f"ex{next(examples)}"
+        target["dir"] = str(tmp / _CRASH_DIR.get(writer, "tier"))
         apply, check = _crash_case(spark, writer, evts, base, tmp)
-        apply(0, 0)
-        monkeypatch.setattr(*inject)
-        try:
-            with pytest.raises(RuntimeError, match="injected crash"):
-                apply(1, 1)
-        finally:
-            monkeypatch.undo()
-        # the checkpointed source replays the same epoch after restart
-        apply(1, 1)
+        # the first drain records the sessions horizon; every other point
+        # needs a prior wave's partitions to back up and merge with
+        crash_wave = 0 if crash_point == "horizon" else 1
+        for wave in range(2):
+            if wave == crash_wave:
+                monkeypatch.setattr(*inject)
+                try:
+                    with pytest.raises(RuntimeError, match="injected crash"):
+                        apply(wave, wave)
+                finally:
+                    monkeypatch.undo()
+            # the checkpointed source replays the same epoch after restart
+            apply(wave, wave)
         check()
-        # journal and backups fully settled
-        tier = str(tmp / "tier")
-        assert not os.path.exists(f"{tier}/{txn.JOURNAL}")
-        assert not os.path.exists(f"{tier}/{txn.BACKUP}")
+        # journal and backups fully settled in every tier
+        tiers = sorted(str(p) for p in tmp.iterdir())
+        for tier in tiers:
+            assert not os.path.exists(f"{tier}/{txn.JOURNAL}")
+            assert not os.path.exists(f"{tier}/{txn.BACKUP}")
+
+        # replaying the committed epoch again changes no file
+        def files():
+            return sorted(
+                (f"{d}/{n}", os.stat(f"{d}/{n}").st_mtime_ns)
+                for t in tiers for d, _, names in os.walk(t) for n in names
+            )
+
+        before = files()
+        apply(1, 1)
+        assert files() == before
 
     run()
 

@@ -9,6 +9,7 @@ with no new files changes nothing (exactly-once resume).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -147,34 +148,45 @@ def test_partial_merge_is_algebraic(spark):
     assert whole.exceptAll(merged).count() == 0
 
 
-def test_cascade_crash_before_refresh_is_replayed(spark, tmp_path):
-    """Round-4 ADVICE fix: a crash between the 1min epoch record and the
-    coarser refresh must NOT leave 1h/1d permanently stale. The 1min
-    upsert records the affected days as pending_refresh with its epoch;
-    a replayed epoch re-runs just the idempotent refresh and clears the
-    marker."""
+def test_cascade_crash_before_1min_commit_is_replayed(spark, tmp_path, monkeypatch):
+    """The cascade commits 1h, then 1d, then 1min, each with the journaled
+    swap under one epoch, so the 1min epoch record is its only commit
+    point. Crash the second batch after both coarse tiers committed and
+    the 1min tier wrote, but before its epoch record: the replay must roll
+    the 1min write back, re-swap the coarse days, and converge every tier
+    to the batch cascade; replaying the settled epoch again is a no-op."""
     tv = _tv(spark).cache()
     t1 = str(tmp_path / "t1min")
     dirs = {"1h": str(tmp_path / "t1h"), "1d": str(tmp_path / "t1d")}
-    # simulate the crash: 1min upsert + epoch record happen (with the
-    # pending marker), but the process dies before refresh_coarser
-    dates = ups.upsert_batch(spark, tv, t1, epoch_id=0, pending_refresh=True)
-    assert dates and sorted(
-        ups.txn.pending_refresh_dates(spark, t1)
-    ) == sorted(dates)
-    import os
+    waves = [tv.filter(F.pmod("turn_idx", F.lit(2)) == w) for w in range(2)]
+    ups.upsert_batch_cascade(spark, waves[0], t1, dirs, epoch_id=0)
+    real_record = ups.txn.record_epoch
 
-    assert not os.path.isdir(dirs["1h"])  # refresh never ran
+    def crash_on_1min(s, tier_dir, epoch_id):
+        if tier_dir == t1:
+            raise RuntimeError("injected crash before the 1min epoch record")
+        real_record(s, tier_dir, epoch_id)
+
+    monkeypatch.setattr(ups.txn, "record_epoch", crash_on_1min)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ups.upsert_batch_cascade(spark, waves[1], t1, dirs, epoch_id=1)
+    monkeypatch.undo()
+    # both coarse tiers committed epoch 1; the 1min tier did not
+    epochs = [ups.txn.last_applied_epoch(spark, d) for d in (dirs["1h"], dirs["1d"], t1)]
+    assert epochs == [1, 1, 0]
     # foreachBatch replays the same epoch after restart
-    n = ups.upsert_batch_cascade(spark, tv, t1, dirs, epoch_id=0)
-    assert n == len(dates)  # the owed refresh ran
-    assert ups.txn.pending_refresh_dates(spark, t1) == []  # marker cleared
+    n = ups.upsert_batch_cascade(spark, waves[1], t1, dirs, epoch_id=1)
+    assert n > 0
     exp_1m = rollup.temporal_bin(tv, "minute")
     exp_1h = rollup.tier_from_finer(exp_1m, "hour")
     exp_1d = rollup.tier_from_finer(exp_1h, "day")
-    for path, exp in ((dirs["1h"], exp_1h), (dirs["1d"], exp_1d)):
-        got = spark.read.parquet(path).drop("bucket_date")
+    for path, exp in ((t1, exp_1m), (dirs["1h"], exp_1h), (dirs["1d"], exp_1d)):
+        got = (
+            ups.read_tier_public(spark, path)
+            if path == t1
+            else spark.read.parquet(path).drop("bucket_date")
+        )
         assert got.exceptAll(exp).count() == 0, path
         assert exp.exceptAll(got).count() == 0, path
-    # a second replay of the settled epoch is now a complete no-op
-    assert ups.upsert_batch_cascade(spark, tv, t1, dirs, epoch_id=0) == 0
+    # a second replay of the settled epoch is a complete no-op
+    assert ups.upsert_batch_cascade(spark, waves[1], t1, dirs, epoch_id=1) == 0
