@@ -59,20 +59,34 @@ def _pack(vals: np.ndarray, nbits: np.ndarray) -> bytes:
 
 
 class _BitReader:
-    __slots__ = ("bits", "pos")
+    """MSB-first field reader. Each field is one ``int.from_bytes`` over the
+    at most 9 bytes that hold it, then one shift and mask: no per-bit loop,
+    and no whole-blob integer (whose shifts would make decode quadratic in
+    blob length)."""
+
+    __slots__ = ("buf", "pos", "nbits")
 
     def __init__(self, buf: bytes):
-        self.bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
+        self.nbits = 8 * len(buf)
+        # zero tail: a prefix peek may run past the last field
+        self.buf = bytes(buf) + bytes(9)
         self.pos = 0
 
-    def read(self, n: int) -> int:
-        out = 0
-        b = self.bits
+    def peek(self, n: int) -> int:
         p = self.pos
-        for i in range(n):
-            out = (out << 1) | int(b[p + i])
-        self.pos = p + n
+        lo = p >> 3
+        hi = (p + n + 7) >> 3
+        word = int.from_bytes(self.buf[lo:hi], "big")
+        return (word >> ((hi << 3) - p - n)) & ((1 << n) - 1)
+
+    def read(self, n: int) -> int:
+        out = self.peek(n)
+        self.pos += n
         return out
+
+    def check_end(self) -> None:
+        if self.pos > self.nbits:
+            raise ValueError("truncated Gorilla bitstream")
 
 
 def _zigzag(x: np.ndarray) -> np.ndarray:
@@ -145,23 +159,27 @@ def decode_ts(buf: bytes) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     if n == 1:
         return np.array([t0], dtype=np.int64)
-    out = np.empty(n, dtype=np.int64)
-    out[0], out[1] = t0, t0 + d0
     r = _BitReader(buf[24:])
-    delta = d0
-    for i in range(2, n):
-        if r.read(1) == 0:
-            dod = 0
-        elif r.read(1) == 0:
-            dod = _unzigzag(r.read(16))
-        elif r.read(1) == 0:
-            dod = _unzigzag(r.read(32))
+    dods = [0] * (n - 2)
+    for i in range(n - 2):
+        c = r.peek(4)  # class prefix: 0 | 10 | 110 | 1110
+        if c < 0b1000:
+            r.pos += 1
+        elif c < 0b1100:
+            r.pos += 2
+            dods[i] = _unzigzag(r.read(16))
+        elif c < 0b1110:
+            r.pos += 3
+            dods[i] = _unzigzag(r.read(32))
         else:
-            r.read(1)  # the '0' of '1110'
-            dod = _unzigzag(r.read(64))
-        delta += dod
-        out[i] = out[i - 1] + delta
-    return out
+            r.pos += 4
+            dods[i] = _unzigzag(r.read(64))
+    r.check_end()
+    # int64 cumsums wrap exactly like the encoder's np.diff
+    deltas = np.empty(n, dtype=np.int64)
+    deltas[0], deltas[1] = t0, d0
+    deltas[2:] = d0 + np.cumsum(np.array(dods, dtype=np.int64))
+    return np.cumsum(deltas)
 
 
 # ---------------------------------------------------------------------------
@@ -179,21 +197,7 @@ def encode_vals(values: np.ndarray) -> bytes:
     x = v[1:] ^ v[:-1]
     vals_list: list[tuple[int, int]] = []
     prev_lead, prev_len = -1, -1
-    # exact leading/trailing-zero counts, vectorized binary descent
-    lz = np.zeros(len(x), dtype=np.int64)
-    tmp = x.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = tmp >> np.uint64(64 - shift) == 0
-        lz[mask] += shift
-        tmp[mask] <<= np.uint64(shift)
-    tz = np.zeros(len(x), dtype=np.int64)
-    tmp = x.copy()
-    nz = tmp != 0
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = nz & ((tmp & ((np.uint64(1) << np.uint64(shift)) - np.uint64(1))) == 0)
-        tz[mask] += shift
-        tmp[mask] >>= np.uint64(shift)
-    tz[~nz] = 64
+    lz, tz = _leading_trailing_zeros(x)
     for i in range(len(x)):  # reference kernel; the hot path is the
         # vectorized encode_vals_shard below (same format, same policy)
         xi = int(x[i])
@@ -228,23 +232,24 @@ def decode_vals(buf: bytes) -> np.ndarray:
     n = int(head[0])
     if n == 0:
         return np.empty(0, dtype=np.float64)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = head[1]
     r = _BitReader(buf[16:])
+    xors = [0] * n
+    xors[0] = int(head[1])
     lead, mlen = 0, 0
     for i in range(1, n):
-        if r.read(1) == 0:
-            out[i] = out[i - 1]
+        c = r.peek(2)  # class prefix: 0 | 10 | 11
+        if c < 0b10:
+            r.pos += 1
             continue
-        if r.read(1) == 1:
-            lead = r.read(5)
-            mlen = r.read(6)
-            if mlen == 0:
-                mlen = 64
-        mbits = r.read(mlen)
-        xi = mbits << (64 - lead - mlen)
-        out[i] = out[i - 1] ^ np.uint64(xi)
-    return out.view(np.float64)
+        if c == 0b11:
+            window = r.read(13)  # '11' + 5b lead + 6b len
+            lead = (window >> 6) & 0x1F
+            mlen = (window & 0x3F) or 64
+        else:
+            r.pos += 2
+        xors[i] = r.read(mlen) << (64 - lead - mlen)
+    r.check_end()
+    return np.bitwise_xor.accumulate(np.array(xors, dtype=np.uint64)).view(np.float64)
 
 
 # ---------------------------------------------------------------------------
@@ -689,24 +694,8 @@ def decompress_conversations(enc: DataFrame) -> DataFrame:
 
     def _batches(it):
         for pdf in it:
-            if pdf.empty:
-                continue
-            convs, tss, vss = [], [], []
-            for conv, tb, vb in zip(
-                pdf["conv_id"], pdf["ts_blob"], pdf["val_blob"]
-            ):
-                t = decode_ts(bytes(tb))
-                v = decode_vals(bytes(vb))
-                convs.append(np.repeat(conv, len(t)))
-                tss.append(t)
-                vss.append(v)
-            yield pd.DataFrame(
-                {
-                    "conv_id": np.concatenate(convs),
-                    "ts": pd.to_datetime(np.concatenate(tss), unit="us"),
-                    "value": np.concatenate(vss),
-                }
-            )
+            if not pdf.empty:
+                yield _decode_enc_pdf(pdf)
 
     return enc.mapInPandas(_batches, "conv_id string, ts timestamp, value double")
 

@@ -99,10 +99,13 @@ def get_spark(
         )
     )
     if os.environ.get("SPARK_GRAFT_PRELOAD", "1") != "0":
-        # Preload numpy/pandas/pyarrow in the worker daemon so forked
-        # workers inherit them copy-on-write instead of importing per
-        # worker (aisdb_spark/worker_daemon.py; first-Python-stage cost
-        # measured 12-15 s → ~2 s at local[32]).
+        # The worker daemon (aisdb_spark/worker_daemon.py) imports the
+        # kernel stack once before it forks, then removes both per-task
+        # costs of the stock daemon: the zip/jar importers whose archives
+        # every task's invalidate_caches() re-read (dropped), and the
+        # post-task gc.collect() over the preloaded heap (gc.freeze()).
+        # Measured at 4 cores: worker CPU per gorilla_metrics execution
+        # 1.9-2.1 → 0.08-0.11 CPU-s.
         builder = builder.config(
             "spark.python.daemon.module", "aisdb_spark.worker_daemon"
         )

@@ -70,7 +70,13 @@ def read_transcripts_zip(spark: SparkSession, path: str) -> DataFrame:
     archive never touches the driver or a shared temp dir, so N archives
     decode on N executors. Members are processed in sorted-name order for
     determinism; non-.csv members are skipped like the reference's suffix
-    filter."""
+    filter.
+
+    ``path`` is an archive, a directory of archives, or a file-name glob
+    in one directory (``.../arch*.zip``). A glob is passed as
+    ``pathGlobFilter`` over its directory: loaded as a path, Spark's
+    metadata-log probe would take it for a literal directory and log a
+    ``FileNotFoundException`` trace on every read."""
     import io as _io
     import zipfile
 
@@ -79,7 +85,11 @@ def read_transcripts_zip(spark: SparkSession, path: str) -> DataFrame:
     from aisdb_spark.sources.normalize import normalize_session
 
     normalize_session(spark)  # naive parsed datetimes must mean UTC
-    bin_df = spark.read.format("binaryFile").load(path)
+    reader = spark.read.format("binaryFile")
+    parent, name = os.path.split(path)
+    if any(c in name for c in "*?[{"):
+        reader, path = reader.option("pathGlobFilter", name), parent
+    bin_df = reader.load(path)
 
     def _unpack(it):
         cols = list(CSV_COLUMNS)
