@@ -128,7 +128,7 @@ def write_tier(
         rows_bound = int(fingerprint.get("rows", 0) or 0)
         # desired write tasks from data size (~250k rows/task, capped at
         # 2×cores) — keeps big tiers parallel without inflating small
-        # tiers' file count (same three-term rule as txn.swap_commit)
+        # tiers' file count (same three-term rule as txn.merge_into_tier)
         desired_tasks = min(
             -(-rows_bound // 250_000),
             2 * df.sparkSession.sparkContext.defaultParallelism,

@@ -62,18 +62,20 @@ def temporal_bin(df: DataFrame, unit: str = "minute") -> DataFrame:
     )
 
 
-def tier_from_finer(finer: DataFrame, unit: str) -> DataFrame:
+def tier_from_finer(finer: DataFrame, unit: str, *keys: str) -> DataFrame:
     """Re-aggregate a finer tier into a coarser one (1min→1h, 1h→1d).
 
     first/last are carried by the finer tier's ``bucket_start`` ordering —
     valid because ``ts`` is non-decreasing in ``turn_idx`` within a
     conversation (the transcripts invariant), so the earliest finer bucket
-    contains the overall first turn.
+    contains the overall first turn. ``keys`` are further grouping columns
+    carried through, each constant within a coarse bucket (the streaming
+    cascade's ``bucket_date`` and ``salt``).
     """
     assert unit in ("hour", "day"), unit
     return (
         finer.groupBy(
-            "conv_id", F.date_trunc(unit, "bucket_start").alias("bucket_start")
+            "conv_id", F.date_trunc(unit, "bucket_start").alias("bucket_start"), *keys
         )
         .agg(
             F.sum("n_turns").alias("n_turns"),

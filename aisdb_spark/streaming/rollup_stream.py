@@ -151,14 +151,16 @@ def rollup_partials_events(events: DataFrame) -> DataFrame:
     )
 
 
-def merge_rollup_partials(parts: DataFrame) -> DataFrame:
+def merge_rollup_partials(parts: DataFrame, *keys: str) -> DataFrame:
     """Algebraic merge of 1min event partials sharing (bucket_start,
     user_id) — commutative and associative, so micro-batch boundaries and
-    arrival order cannot change the result."""
+    arrival order cannot change the result. ``keys`` are further grouping
+    columns carried through, each a function of (bucket_start, user_id) —
+    the drain's ``bucket_date`` and ``salt``, as in the cascade."""
     fo = F.struct(F.col("first_ts").alias("ts"), F.col("first_id").alias("event_id"))
     lo = F.struct(F.col("last_ts").alias("ts"), F.col("last_id").alias("event_id"))
     return (
-        parts.groupBy("bucket_start", "user_id")
+        parts.groupBy("bucket_start", "user_id", *keys)
         .agg(
             F.sum("n_events").alias("n_events"),
             F.sum("sum_cents").alias("sum_cents"),
@@ -176,6 +178,7 @@ def merge_rollup_partials(parts: DataFrame) -> DataFrame:
             F.col("_fo.event_id").alias("first_id"),
             F.col("_lo.ts").alias("last_ts"),
             F.col("_lo.event_id").alias("last_id"),
+            *keys,
         )
     )
 
@@ -192,11 +195,14 @@ def upsert_rollup_partials_batch(
     matters at scale). Epoch replays are skipped via ``_epoch.json``; the
     write is the journaled partition swap (streaming/txn.py), so a crash
     mid-write rolls back to the pre-batch tier on the next call."""
-    day = F.to_date("bucket_start")
     txn.merge_into_tier(
         spark, tier_dir,
-        rollup_partials_events(events_batch).withColumn("bucket_date", day),
-        lambda parts: merge_rollup_partials(parts).withColumn("bucket_date", day),
+        rollup_partials_events(events_batch).withColumn(
+            "bucket_date", F.to_date("bucket_start")
+        ),
+        lambda parts, cluster: merge_rollup_partials(
+            cluster(parts, "user_id"), "bucket_date", "salt"
+        ),
         epoch_id=epoch_id,
     )
 
@@ -430,29 +436,28 @@ def upsert_sessions_batch(
             {d + dt.timedelta(days=off) for d in days for off in range(-horizon - 1, 2)}
         )
 
-        def settle(out):
-            stats = out.agg(
-                F.max(F.datediff(F.to_date("session_end"), start_day)).alias("span"),
-                # rides the span job for free: sizes the swap's output files
-                F.count(F.lit(1)).alias("rows"),
-            ).first()
+        def settle(_out, stats, _cluster):
+            # the widest merged session, observed on the merge's own job
             span = int(stats["span"] or 0)
             # record the first horizon, or widen it, BEFORE the write
             if recorded is None or span > horizon:
                 _record_session_horizon(spark, tier_dir, max(span, horizon))
-            return int(stats["rows"] or 0)
 
         # swap days = the read window: out days ⊆ read days (a merged
         # session's start comes from a read partition or the batch), so
         # the journal covers every partition this commit may clear or write
         return read_days, settle
 
+    # the merge can move a session to another day, so it clusters its
+    # output, not its input (which its user_id window shuffles anyway)
     txn.merge_into_tier(
         spark, tier_dir,
         partials.select(*_SESSION_TIER_COLS).withColumn("bucket_date", start_day),
-        lambda u: merge_session_partials(u).withColumn("bucket_date", start_day),
+        lambda u, cluster: cluster(
+            merge_session_partials(u).withColumn("bucket_date", start_day), "user_id"
+        ),
         epoch_id=epoch_id, window=window,
-        days=F.explode(F.sequence(start_day, F.to_date("session_end"))),
+        days=F.sequence(start_day, F.to_date("session_end")),
     )
 
 

@@ -61,7 +61,7 @@ single-commit path where the runtime jar exists.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aisdb_spark.streaming import fsio
@@ -146,7 +146,6 @@ def swap_commit(
     out: DataFrame,
     dates,
     epoch_id: int | None = None,
-    rows_hint: int | None = None,
 ) -> None:
     """Steps 1-5 above. ``out`` must carry a ``bucket_date`` column whose
     values fall inside ``dates`` (every date the merge read or writes),
@@ -155,13 +154,12 @@ def swap_commit(
     dynamic-overwrite lineage), because step 2 renames those partitions
     away before the write.
 
-    ``rows_hint``: the caller's row count for the NEW side of the merge
-    (callers get it for free from the same job that finds the touched
-    dates). Together with the on-disk bytes of the backed-up partitions
-    (already listed for the journal), it sizes the output file count."""
+    ``out`` must also arrive clustered by ``bucket_date``: the write takes
+    the partitions as they lie, and each write task writes one file into
+    every date directory it holds rows of. :func:`merge_into_tier` owns
+    the clustering and the file-count rule."""
     dates = sorted({str(d) for d in dates})
     backed, files = [], {}
-    backed_bytes = 0
     for d in dates:
         entries = fsio.list_entries(spark, f"{tier_dir}/bucket_date={d}")
         if entries:
@@ -170,7 +168,6 @@ def swap_commit(
             # INSIDE a copy+delete rename (S3A) file-by-file instead of
             # trusting backup-directory existence as a complete pre-image
             files[d] = sorted(n for n, _sz, is_dir in entries if not is_dir)
-            backed_bytes += sum(sz for _n, sz, is_dir in entries if not is_dir)
     journal = {"epoch": epoch_id, "backed": backed, "cleared": dates,
                "files": files}
     fsio.write_side_json_atomic(spark, tier_dir, JOURNAL, journal)
@@ -180,37 +177,6 @@ def swap_commit(
             f"{tier_dir}/bucket_date={d}",
             f"{tier_dir}/{BACKUP}/bucket_date={d}",
         )
-    # Re-cluster on (bucket_date, salt) before the partitioned write:
-    # without this every shuffle partition writes a sliver into every date
-    # directory — file count ∝ parallelism × dates (measured 1,920 files
-    # per micro-batch at 32 partitions × 30 dates, 4-16 s to write and as
-    # long again to read back). With it, file count is dates × k — the
-    # same bucketed layout rule as checkpoint.write_tier. k is
-    # SIZE-derived (guide §6), from three terms, floor 1:
-    # - write parallelism: ~250k rows per write task, capped at 2×cores —
-    #   a 10k-row micro-batch writes ONE file per date (commit cost ∝
-    #   file count; a parallelism-only 2×cores rule wrote 3× the files),
-    #   while a 20M-row merge keeps ~2×cores write tasks (a
-    #   dates-only task count regressed that case 87→131 s at the 20M
-    #   drain: ~30 tasks from 30 hash keys collide into stragglers,
-    #   guide §2.5);
-    # - file sizing: ~512 MB of pre-existing partition bytes, and ~1M
-    #   rows, per file per date.
-    # The salt is a deterministic row hash (task retries reproduce the
-    # same placement). ``rows_hint`` should be the OUTPUT row count when
-    # the caller has it cheaply (post-localCheckpoint count); callers
-    # that cannot hint fall back to bytes-only sizing.
-    n_dates = max(len(dates), 1)
-    rows = int(rows_hint or 0)
-    desired_tasks = min(-(-rows // 250_000), 2 * spark.sparkContext.defaultParallelism)
-    k = max(
-        1,
-        -(-desired_tasks // n_dates),
-        -(-backed_bytes // (512 * 1024 * 1024 * n_dates)),
-        -(-rows // (1_000_000 * n_dates)),
-    )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in out.columns]), F.lit(k))
-    out = out.repartition(n_dates * k, F.col("bucket_date"), salt)
     (
         fsio.gated_write(out.write.mode("overwrite"))
         # write-scoped dynamic overwrite: only partitions present in `out`
@@ -234,6 +200,13 @@ def swap_commit(
     fsio.delete_side_json(spark, tier_dir, JOURNAL)
 
 
+# Compressed parquet bytes per stored tier row, to estimate the existing
+# rows of the read days from the file sizes already listed. The 1min tier
+# stores 9.6-21 B per row (sf0.1-sf0.01); a low guess errs toward more
+# write tasks, never toward the straggler case below.
+ROW_BYTES = 10
+
+
 def merge_into_tier(
     spark: SparkSession,
     tier_dir: str,
@@ -249,17 +222,24 @@ def merge_into_tier(
     or its epoch was already applied).
 
     ``new`` holds the batch's rows in tier layout, ``bucket_date``
-    included; ``merge(existing ∪ new)`` re-aggregates them with the tier
-    rows of the days read and must return tier rows with ``bucket_date``.
-    ``days`` is the per-row expression of the days a row touches (default
-    ``bucket_date``). ``window(days)`` optionally returns ``(read_days,
-    settle)``: the days to read and swap (a superset of ``days``), and
-    ``settle(out) -> rows``, run on the materialized output before the
-    swap in place of the row count. It may record side state the next
-    batch's window depends on, or commit tiers derived from ``out`` (the
-    cascade's 1h/1d): anything it commits lands before this tier's epoch
-    record, so a crash rolls this tier back and the replay runs ``settle``
-    again on the same ``out`` — its commits must be idempotent per epoch.
+    included. ``merge(parts, cluster)`` re-aggregates ``parts`` (the tier
+    rows of the days read ∪ ``new``) and returns tier rows with
+    ``bucket_date`` and ``salt``, clustered by ``cluster(df, *key)``: it
+    hashes ``key`` into the ``salt`` column (kept when no key is given)
+    and repartitions on ``(bucket_date, salt)``. A merge that groups by
+    a superset of ``key`` plus ``bucket_date`` and ``salt`` clusters its
+    input and needs no second exchange; one that moves rows to other days
+    clusters its output instead. ``days`` is the per-row array of the
+    days a row touches (default ``[bucket_date]``). ``window(days)``
+    optionally returns ``(read_days, settle)``: the days to read and swap
+    (a superset of ``days``), and ``settle(out, stats, cluster)``, run on
+    the materialized output before the swap; ``stats`` holds its observed
+    ``rows`` and ``span`` (the most days one row touches, minus one). It
+    may record side state the next batch's window depends on, or commit
+    tiers derived from ``out`` (the cascade's 1h/1d): anything it commits
+    lands before this tier's epoch record, so a crash rolls this tier back
+    and the replay runs ``settle`` again on the same ``out`` — its commits
+    must be idempotent per epoch.
 
     The ordering rules live here and nowhere else:
 
@@ -267,43 +247,75 @@ def merge_into_tier(
        reads the tier or its epoch;
     2. an epoch at or below the recorded one is skipped — the
        idempotent-apply half of the effectively-once contract;
-    3. ``new`` is persisted, so the days job and the merge/write do not
-       re-run the upstream aggregation; the days job also counts the
-       batch rows, which size the swap's output files when there is no
-       existing tier to merge;
-    4. the merge reads only the window's partitions (partition-pruned)
-       and is materialized BEFORE :func:`swap_commit`, whose step 2
-       renames exactly those partitions away (and overwrite lineage must
-       not read its own target); the row count of the checkpointed
-       blocks is a cheap scan, not a recompute. A first batch has no
-       self-read and skips the double materialization."""
+    3. ``new`` is materialized once, and its row count and touched days
+       are observed on that job; with the byte sizes of the read days'
+       partitions they fix the file-count rule before the merge runs;
+    4. the merge reads only the existing partitions of the window, with
+       the known tier schema, and is materialized BEFORE
+       :func:`swap_commit`, whose step 2 renames exactly those partitions
+       away (and overwrite lineage must not read its own target). Its
+       rows leave the merge clustered, so the swap writes them as they
+       lie. Both materializations are released when the batch ends."""
     recover(spark, tier_dir)
     if epoch_id is not None and epoch_id <= last_applied_epoch(spark, tier_dir):
         return []
-    new = new.persist()
+    days = F.array("bucket_date") if days is None else days
+    seen, merged = Observation(), Observation()
+    held = [new.observe(
+        seen, F.count(F.lit(1)).alias("rows"),
+        F.array_distinct(F.flatten(F.collect_set(days))).alias("days"),
+    ).localCheckpoint(eager=True)]
     try:
-        by_day = (
-            new.select((F.col("bucket_date") if days is None else days).alias("d"))
-            .groupBy("d").count().collect()
-        )
-        dates = [r["d"] for r in by_day]
+        batch = seen.get
+        dates = batch["days"]
         if not dates:
             return []
         read_dates, settle = window(dates) if window else (dates, None)
-        out, rows = new, sum(r["count"] for r in by_day)
-        had_tier = fsio.tier_nonempty(spark, tier_dir)
-        if had_tier:
-            existing = spark.read.parquet(tier_dir).filter(
-                F.col("bucket_date").isin(read_dates)  # partition-pruned scan
-            )
-            out = merge(existing.unionByName(new)).localCheckpoint(eager=True)
+        listed = {d: fsio.list_entries(spark, f"{tier_dir}/bucket_date={d}") for d in read_dates}
+        parts = held[0]
+        if any(listed.values()):
+            parts = spark.read.schema(parts.schema).option("basePath", tier_dir).parquet(
+                *[f"{tier_dir}/bucket_date={d}" for d, entries in listed.items() if entries]
+            ).unionByName(parts)
+        # The file-count rule. Without clustering on (bucket_date, salt)
+        # every write task writes a sliver into every date directory — file
+        # count ∝ parallelism × dates (measured 1,920 files per micro-batch
+        # at 32 partitions × 30 dates, 4-16 s to write and as long again to
+        # read back). With it, file count is at most dates × k — the same
+        # bucketed layout rule as checkpoint.write_tier. k is SIZE-derived
+        # (guide §6) from the new rows plus the existing rows of the read
+        # days (estimated from their bytes), in three terms, floor 1:
+        # - write parallelism: ~250k rows per write task, capped at 2×cores —
+        #   a 10k-row micro-batch writes ONE file per date (commit cost ∝
+        #   file count; a parallelism-only 2×cores rule wrote 3× the files),
+        #   while a 20M-row merge keeps ~2×cores write tasks (a dates-only
+        #   task count regressed that case 87→131 s at the 20M drain: ~30
+        #   tasks from 30 hash keys collide into stragglers, guide §2.5);
+        # - file sizing: ~512 MB of pre-existing partition bytes, and ~1M
+        #   rows, per file per date.
+        # The salt hashes the merge key, so rows that merge share it and a
+        # task retry reproduces the same placement.
+        n_dates = len(read_dates)
+        old_bytes = sum(sz for entries in listed.values() for _n, sz, _d in entries)
+        rows = batch["rows"] + old_bytes // ROW_BYTES
+        desired_tasks = min(-(-rows // 250_000), 2 * spark.sparkContext.defaultParallelism)
+        k = max(1, -(-desired_tasks // n_dates), -(-rows // (1_000_000 * n_dates)),
+                -(-old_bytes // (512 * 1024 * 1024 * n_dates)))
+
+        def cluster(df: DataFrame, *key: str) -> DataFrame:
+            if key:
+                df = df.withColumn("salt", F.pmod(F.xxhash64(*key), F.lit(k)))
+            return df.repartition(n_dates * k, "bucket_date", "salt")
+
+        held.append(merge(parts, cluster).observe(
+            merged, F.count(F.lit(1)).alias("rows"),
+            (F.max(F.size(days)) - 1).alias("span"),
+        ).localCheckpoint(eager=True))
         if settle:
-            rows = settle(out)
-        elif had_tier:
-            rows = out.count()
-        swap_commit(
-            spark, tier_dir, out, read_dates, epoch_id=epoch_id, rows_hint=rows,
-        )
+            settle(held[1], merged.get, cluster)
+        swap_commit(spark, tier_dir, held[1].drop("salt"), read_dates, epoch_id=epoch_id)
         return dates
     finally:
-        new.unpersist()
+        # a checkpoint's blocks otherwise stay until the JVM collects its RDD
+        for df in held:
+            df._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001

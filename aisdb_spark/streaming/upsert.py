@@ -45,9 +45,15 @@ row-identical to the one-shot batch ``rollup.temporal_bin`` of the full
 input.
 
 Scale: the merge reads only the affected ``bucket_date`` partitions
-(partition pruning on the tier scan) and shuffles only
-|late partials| + |existing rows of touched days|; with an Iceberg catalog
-the dynamic overwrite becomes ``overwritePartitions()`` on the same keys.
+(the existing day directories, read by path with the known tier schema)
+and shuffles only |late partials| + |existing rows of touched days|, once,
+by the write key ``(bucket_date, salt)`` with the salt hashed from
+``conv_id``. The merge groups within that clustering, and so do the hour
+and day aggregations after their one exchange each, so every tier is
+written as its rows lie: one file per touched day at micro-batch sizes.
+The batch's touched days and row count ride on its own materialization as
+an ``Observation``, not on separate jobs. With an Iceberg catalog the
+dynamic overwrite becomes ``overwritePartitions()`` on the same keys.
 """
 
 from __future__ import annotations
@@ -89,9 +95,12 @@ def partial_1min(turns: DataFrame) -> DataFrame:
     )
 
 
-def merge_partials(parts: DataFrame) -> DataFrame:
-    """Algebraic merge of 1min partials sharing (conv_id, bucket_start)."""
-    return parts.groupBy("conv_id", "bucket_start").agg(
+def merge_partials(parts: DataFrame, *keys: str) -> DataFrame:
+    """Algebraic merge of 1min partials sharing (conv_id, bucket_start).
+    ``keys`` are further grouping columns carried through, each a function
+    of (conv_id, bucket_start) — the cascade's ``bucket_date`` and
+    ``salt``, which keep the merge in the stage of its clustering."""
+    return parts.groupBy("conv_id", "bucket_start", *keys).agg(
         F.sum("n_turns").alias("n_turns"),
         F.sum("sum_value").alias("sum_value"),
         F.min("min_value").alias("min_value"),
@@ -120,17 +129,18 @@ def upsert_batch(
     ``coarser_dirs`` (``{"1h": dir, "1d": dir}``, either optional) the
     affected days of those tiers are rebuilt from the merged 1min rows by
     :func:`refresh_coarser` and committed before the 1min tier."""
-    day = F.to_date("bucket_start")
     window = None
     if coarser_dirs:
         def window(dates):
-            return dates, lambda out: refresh_coarser(
-                spark, out, coarser_dirs, dates, epoch_id
+            return dates, lambda out, _stats, cluster: refresh_coarser(
+                spark, out, cluster, coarser_dirs, dates, epoch_id
             )
     return txn.merge_into_tier(
         spark, tier_dir,
-        partial_1min(turns).withColumn("bucket_date", day),
-        lambda parts: merge_partials(parts).withColumn("bucket_date", day),
+        partial_1min(turns).withColumn("bucket_date", F.to_date("bucket_start")),
+        lambda parts, cluster: merge_partials(
+            cluster(parts, "conv_id"), "bucket_date", "salt"
+        ),
         epoch_id=epoch_id, window=window,
     )
 
@@ -173,34 +183,33 @@ def stream_upsert_1min(
 def refresh_coarser(
     spark: SparkSession,
     out: DataFrame,
+    cluster,
     coarser_dirs: dict[str, str],
     dates: list,
     epoch_id: int | None = None,
-) -> int:
+) -> None:
     """Incremental continuous-aggregate refresh: derive the 1h/1d rows of
     ``dates`` from ``out`` — the materialized, merged 1min rows of exactly
-    those days — and commit each tier with the journaled swap under
-    ``epoch_id``. A day is self-contained for every coarser unit (day ⊇
-    hour ⊇ minute), so rebuilding whole affected days is exact and
-    re-swapping them on a replay is idempotent; cost ∝ touched days, not
-    table size. TimescaleDB's ``refresh_continuous_aggregate(window)``
-    expressed in Spark. Returns the 1min row count, which sizes the 1min
-    swap's output files (the ``settle`` contract of
+    those days, with their ``salt`` — and commit each tier with the
+    journaled swap under ``epoch_id``. A day is self-contained for every
+    coarser unit (day ⊇ hour ⊇ minute), so rebuilding whole affected days
+    is exact and re-swapping them on a replay is idempotent; cost ∝
+    touched days, not table size. TimescaleDB's
+    ``refresh_continuous_aggregate(window)`` expressed in Spark.
+
+    Each tier takes one exchange, ``cluster(out)`` on (bucket_date,
+    salt): the salt hashes conv_id, so the hour and the day aggregations
+    both group within it and run in the stage after the exchange, and the
+    swap writes their rows as they lie (the ``settle`` contract of
     :func:`txn.merge_into_tier`)."""
     from aisdb_spark.operators import rollup
 
-    upstream = out
-    for unit, name in (("hour", "1h"), ("day", "1d")):
-        upstream = rollup.tier_from_finer(upstream, unit)
-        tier_dir = coarser_dirs.get(name)
+    hourly = rollup.tier_from_finer(cluster(out), "hour", "bucket_date", "salt")
+    daily = rollup.tier_from_finer(hourly, "day", "bucket_date", "salt")
+    for tier_dir, rows in ((coarser_dirs.get("1h"), hourly), (coarser_dirs.get("1d"), daily)):
         if tier_dir:
             txn.recover(spark, tier_dir)
-            txn.swap_commit(
-                spark, tier_dir,
-                upstream.withColumn("bucket_date", F.to_date("bucket_start")),
-                dates, epoch_id=epoch_id,
-            )
-    return out.count()
+            txn.swap_commit(spark, tier_dir, rows.drop("salt"), dates, epoch_id=epoch_id)
 
 
 def upsert_batch_cascade(

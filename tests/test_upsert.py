@@ -190,3 +190,48 @@ def test_cascade_crash_before_1min_commit_is_replayed(spark, tmp_path, monkeypat
         assert exp.exceptAll(got).count() == 0, path
     # a second replay of the settled epoch is a complete no-op
     assert ups.upsert_batch_cascade(spark, waves[1], t1, dirs, epoch_id=1) == 0
+
+
+def test_cascade_batch_job_count_and_file_layout(spark, tmp_path):
+    """A late batch over an existing two-day tier runs at most 9 Spark
+    jobs for all three tiers: the batch rows and the merge are each
+    materialized once with their stats observed on the same job, 1h and
+    1d each take one exchange, and the 1min rows are written as the merge
+    clustered them. The clustering leaves one file per touched day in
+    every tier."""
+    import datetime as dt
+    import os
+
+    base = dt.datetime(2025, 3, 1, 20, 0)
+    rows = [
+        (f"c{i % 5}", i, base + dt.timedelta(minutes=7 * i), float(i % 11))
+        for i in range(120)  # 14 h: two days
+    ]
+    tv = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts timestamp, value double"
+    )
+    late = F.col("turn_idx") % 3 == 0
+    t1 = str(tmp_path / "t1min")
+    dirs = {"1h": str(tmp_path / "t1h"), "1d": str(tmp_path / "t1d")}
+    ups.upsert_batch_cascade(spark, tv.filter(~late), t1, dirs, epoch_id=0)
+    sc = spark.sparkContext
+    sc.setJobGroup("late-batch", "second cascade batch")
+    try:
+        n = ups.upsert_batch_cascade(spark, tv.filter(late), t1, dirs, epoch_id=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 2
+    jobs = sc.statusTracker().getJobIdsForGroup("late-batch")
+    assert len(jobs) <= 9, len(jobs)
+    for tier in (t1, *dirs.values()):
+        day_dirs = sorted(d for d in os.listdir(tier) if d.startswith("bucket_date="))
+        assert day_dirs == ["bucket_date=2025-03-01", "bucket_date=2025-03-02"], tier
+        for d in day_dirs:
+            files = [f for f in os.listdir(f"{tier}/{d}") if f.endswith(".parquet")]
+            assert len(files) == 1, (tier, d, files)
+    exp_1m = rollup.temporal_bin(tv, "minute")
+    exp_1h = rollup.tier_from_finer(exp_1m, "hour")
+    got = spark.read.parquet(dirs["1d"]).drop("bucket_date")
+    exp = rollup.tier_from_finer(exp_1h, "day")
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
