@@ -5,7 +5,8 @@ Re-expresses the trajectory-pipeline semantics of AISViz/AISdb
 Iceberg/parquet tables of multi-turn conversation transcripts
 (conv_id, turn_idx, role, text, tool, ts), Spark-first:
 Window-function segmentation, cascaded windowed rollups,
-applyInPandas interpolation/downsampling, mapInArrow Gorilla codec.
+applyInPandas interpolation/downsampling, and a Gorilla codec run as one
+mapInArrow stage over JVM-sorted batches.
 """
 
 __version__ = "0.1.0"

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aisdb_spark.plans.partitioning import spread_scan
+
 MEDIA_SCHEMA = (
     "doc_id long, media binary, media_type string, width int, height int"
 )
@@ -138,16 +140,9 @@ def with_media(docs: DataFrame) -> DataFrame:
                 out, columns=["doc_id", "media", "media_type", "width", "height"]
             )
 
-    ids = docs.select("doc_id")
-    # Scale-adaptive scan spread (same rule as textops/similarity
-    # _spread_scan): a small corpus arrives as one parquet row group →
-    # one scan task → every payload generation AND the downstream
-    # mapInPandas decode kernels run single-threaded. Repartition on
-    # doc_id only when the scan has fewer partitions than cores; a large
-    # corpus already scans in many splits and takes no extra shuffle.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < target:
-        ids = ids.repartition(target, "doc_id")
+    # spread before the kernel: a small corpus would otherwise generate
+    # payloads AND run the downstream decode kernels single-threaded
+    ids = spread_scan(docs.select("doc_id"), "doc_id")
     return ids.mapInPandas(_gen, MEDIA_SCHEMA)
 
 

@@ -17,11 +17,13 @@ implemented (Facebook Gorilla, Pelkonen et al., VLDB 2015):
 Encode side is numpy-vectorized (deltas, XORs, leading/trailing zero counts,
 bit matrix assembly via ``np.packbits``); the only per-element work is the
 sequential decode state machine — inherent to the format, bounded per
-conversation. In Spark the codec runs inside ``applyInPandas`` groups
-(Arrow-batched); a production deployment would swap the inner kernel for a
-native library with the same wire format.
+conversation. In Spark the codec is one route: the JVM hash-partitions the
+points by conv_id and sorts them by turn, and one ``mapInArrow`` stage
+encodes (:func:`compress`), decodes (:func:`decompress`) or does both
+(:func:`roundtrip`) over the sorted Arrow batches. A production deployment
+would swap the inner kernels for a native library with the same wire format.
 
-Scale: output is one row per conversation (segment) — the compressed
+Scale: output is one row per conversation chunk (segment) — the compressed
 retention layer. Writing these blobs bucketed by conv_id gives the
 TimescaleDB layout: hash-partition by entity, time-ordered within,
 compressed per entity.
@@ -29,10 +31,11 @@ compressed per entity.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # bit packing helpers (vectorized)
@@ -455,300 +458,162 @@ def encode_vals_shard(v: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> li
     return [heads[g].tobytes() + payloads[g] for g in range(n_convs)]
 
 
-def encode_frame(pdf: pd.DataFrame, group_cols: list[str]) -> pd.DataFrame:
-    """Encode a sorted shard frame → one row per group (conv or conv+chunk),
-    entirely via the shard-level kernels."""
-    n = len(pdf)
-    if n == 0:
-        cols = group_cols + [
-            "n_points", "ts_blob", "val_blob", "raw_bytes", "enc_bytes"
-        ]
-        return pd.DataFrame({c: [] for c in cols})
-    key = pdf[group_cols[0]].to_numpy()
-    change = key[1:] != key[:-1]
-    for c in group_cols[1:]:
-        k2 = pdf[c].to_numpy()
-        change = change | (k2[1:] != k2[:-1])
-    starts = np.concatenate([[0], np.flatnonzero(change) + 1]).astype(np.int64)
-    ends = np.concatenate([starts[1:], [n]]).astype(np.int64)
-    t = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-    v = pdf["value"].to_numpy(dtype=np.float64)
-    tbs = encode_ts_shard(t, starts, ends)
-    vbs = encode_vals_shard(v, starts, ends)
-    counts = (ends - starts).astype(np.int64)
-    out = {c: pdf[c].to_numpy()[starts] for c in group_cols}
-    out["n_points"] = counts
-    out["ts_blob"] = tbs
-    out["val_blob"] = vbs
-    out["raw_bytes"] = counts * 16
-    out["enc_bytes"] = np.array(
-        [len(a) + len(b) for a, b in zip(tbs, vbs)], dtype=np.int64
-    )
-    cols = group_cols + ["n_points", "ts_blob", "val_blob", "raw_bytes", "enc_bytes"]
-    return pd.DataFrame({c: out[c] for c in cols})
-
-
 # ---------------------------------------------------------------------------
-# Spark operators
+# Spark route: one mapInArrow stage over JVM-sorted batches
 # ---------------------------------------------------------------------------
 
 _ENC_SCHEMA = (
-    "conv_id string, n_points long, ts_blob binary, val_blob binary, "
-    "raw_bytes long, enc_bytes long"
-)
-_ENC_CHUNKED_SCHEMA = (
     "conv_id string, chunk_id int, n_points long, ts_blob binary, "
     "val_blob binary, raw_bytes long, enc_bytes long"
 )
+_PTS_SCHEMA = "conv_id string, ts timestamp, value double"
+_ENC_ARROW = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("chunk_id", pa.int32()),
+        ("n_points", pa.int64()),
+        ("ts_blob", pa.binary()),
+        ("val_blob", pa.binary()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+    ]
+)
+_PTS_ARROW = pa.schema(
+    [("conv_id", pa.string()), ("ts", pa.timestamp("us")), ("value", pa.float64())]
+)
 
 
-def compress_conversations_chunked(
-    df: DataFrame, max_rows: int = 50_000, shards: int | None = None
-) -> DataFrame:
-    """Per-(conversation, chunk) blobs with chunks of ≤ max_rows turns —
-    the group-size cap for conversations that would exceed task memory
-    (SURVEY.md §7 hard-point (d); AISdb's 50k batching precedent,
-    aisdb_lib/src/decode.rs:19). Chunks are contiguous turn ranges, so
-    decoding is blob-concatenation in chunk_id order; round-trip identity
-    is tested in tests/test_codec.py."""
-    from aisdb_spark.plans.partitioning import cap_group_size
-
-    capped = cap_group_size(
-        df.select("conv_id", "turn_idx", "ts", "value"), max_rows
-    )
-
-    def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "chunk_id", "turn_idx"], kind="stable")
-        return encode_frame(pdf, ["conv_id", "chunk_id"])
-
+def _sorted_points(df: DataFrame) -> DataFrame:
+    """(conv_id, ts, value) hash-partitioned on conv_id and sorted by
+    (conv_id, turn_idx) within each partition: every conversation reaches
+    one task whole and in turn order. turn_idx is dropped after the sort,
+    one column less through the Arrow pipe."""
     spark = df.sparkSession
-    n = shards or spark.sparkContext.defaultParallelism * 2
-    return (
-        capped.withColumn("_shard", F.pmod(F.hash("conv_id", "chunk_id"), F.lit(n)))
-        # explicit-count repartition: keeps the Python stage parallel under
-        # AQE coalescing (see plans/sharding.apply_per_conv); the groupBy
-        # reuses this exchange — still exactly one shuffle
-        .repartition(n, "_shard")
-        .groupBy("_shard")
-        .applyInPandas(lambda pdf: _shard(pdf.drop(columns=["_shard"])), _ENC_CHUNKED_SCHEMA)
+    # explicit count: AQE coalesces a bare repartition("conv_id") to
+    # JVM-sized (~1 MB) partitions, which at small inputs runs the whole
+    # Python stage on one worker
+    n = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        spark.sparkContext.defaultParallelism,
     )
-
-
-def _decode_enc_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Decode a frame of (conv_id, ts_blob, val_blob) rows → point rows.
-    Each blob is self-contained, so row order only affects output order
-    (immaterial to the unordered result sets the queries produce)."""
-    convs, tss, vss = [], [], []
-    for conv, tb, vb in zip(pdf["conv_id"], pdf["ts_blob"], pdf["val_blob"]):
-        t = decode_ts(bytes(tb))
-        v = decode_vals(bytes(vb))
-        convs.append(np.repeat(conv, len(t)))
-        tss.append(t)
-        vss.append(v)
-    return pd.DataFrame(
-        {
-            "conv_id": np.concatenate(convs),
-            "ts": pd.to_datetime(np.concatenate(tss), unit="us"),
-            "value": np.concatenate(vss),
-        }
-    )
-
-
-def decompress_conversations_chunked(enc: DataFrame) -> DataFrame:
-    """Inverse of compress_conversations_chunked → (conv_id, ts, value);
-    chunk order is restored by sorting blobs on (conv_id, chunk_id)."""
-
-    def _batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            yield _decode_enc_pdf(
-                pdf.sort_values(["conv_id", "chunk_id"], kind="stable")
-            )
-
-    return enc.mapInPandas(_batches, "conv_id string, ts timestamp, value double")
-
-
-def roundtrip_conversations_chunked(
-    df: DataFrame, max_rows: int = 50_000, shards: int | None = None
-) -> DataFrame:
-    """Chunk-capped encode → decode in ONE Python stage (guide §4: the
-    two-stage form ships every encoded blob JVM→Python→JVM→Python just to
-    decode it again; fusing keeps the blobs inside the worker that built
-    them). Same window cap, same shard exchange, same kernels — byte-wise
-    the identical encode step as ``compress_conversations_chunked``
-    followed by ``_decode_enc_pdf``, so the output rows are identical to
-    the two-stage path (asserted in tests/test_codec.py)."""
-    from aisdb_spark.plans.partitioning import cap_group_size
-
-    capped = cap_group_size(
-        df.select("conv_id", "turn_idx", "ts", "value"), max_rows
-    )
-
-    def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "chunk_id", "turn_idx"], kind="stable")
-        enc = encode_frame(pdf, ["conv_id", "chunk_id"])
-        if enc.empty:
-            return pd.DataFrame({"conv_id": [], "ts": [], "value": []})
-        return _decode_enc_pdf(enc)
-
-    spark = df.sparkSession
-    n = shards or spark.sparkContext.defaultParallelism * 2
-    return (
-        capped.withColumn("_shard", F.pmod(F.hash("conv_id", "chunk_id"), F.lit(n)))
-        .repartition(n, "_shard")
-        .groupBy("_shard")
-        .applyInPandas(
-            lambda pdf: _shard(pdf.drop(columns=["_shard"])),
-            "conv_id string, ts timestamp, value double",
-        )
-    )
-
-
-def compress_conversations(df: DataFrame, shards: int | None = None) -> DataFrame:
-    """One compressed blob pair per conversation, ordered by turn_idx —
-    the Timescale per-entity compression layout. Input needs ts + value.
-    Emits per-entity lineage metrics (raw vs encoded bytes).
-
-    Grouped by hash(conv_id) super-shards, with a pandas ``groupby`` over
-    conversations inside each shard: JVM→Python group dispatch costs ~6 ms
-    per group, so one applyInPandas group per *conversation* spent 29 s on
-    dispatch alone at 10M turns / 150k convs; sharding amortizes it (same
-    output, deterministic)."""
-
-    def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "turn_idx"], kind="stable")
-        return encode_frame(pdf, ["conv_id"])
-
-    spark = df.sparkSession
-    n = shards or spark.sparkContext.defaultParallelism * 2
     return (
         df.select("conv_id", "turn_idx", "ts", "value")
-        .withColumn("_shard", F.pmod(F.hash("conv_id"), F.lit(n)))
-        # explicit-count repartition: keeps the Python stage parallel under
-        # AQE coalescing (see plans/sharding.apply_per_conv)
-        .repartition(n, "_shard")
-        .groupBy("_shard")
-        .applyInPandas(lambda pdf: _shard(pdf.drop(columns=["_shard"])), _ENC_SCHEMA)
+        .repartition(n, "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .select("conv_id", "ts", "value")
     )
 
 
-def compress_partitions(df: DataFrame, assume_partitioned: bool = False) -> DataFrame:
-    """Zero-shuffle codec: encode directly over conv_id-partitioned data via
-    ``mapInPandas`` with cross-batch carry-over.
-
-    With storage bucketed by conv_id (the Iceberg ``bucket(64, conv_id)``
-    layout / TimescaleDB ``partitioning_column => 'mmsi'``), every
-    conversation is wholly contained in one partition — so compression
-    needs NO exchange at all: sort within partitions, stream Arrow batches,
-    hold back the possibly-incomplete tail conversation of each batch.
-    ``assume_partitioned=False`` adds the hash exchange for arbitrary input.
-    """
-    base = df.select("conv_id", "turn_idx", "ts", "value")
-    if not assume_partitioned:
-        # explicit-count repartition: keeps the Python stage parallel under
-        # AQE coalescing (see codec_arrow.compress_partitions_arrow)
-        spark = df.sparkSession
-        n = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            spark.sparkContext.defaultParallelism,
-        )
-        base = base.repartition(n, "conv_id")
-    # sort JVM-side, then DROP turn_idx before the Python exchange: rows
-    # arrive ordered, so the index is dead weight — one less column through
-    # the Arrow worker protocol (~20% less serialization CPU + bytes on the
-    # dominant cost of this stage; see PLANS.md round-2 notes)
-    base = base.sortWithinPartitions("conv_id", "turn_idx").select(
-        "conv_id", "ts", "value"
-    )
-
-    def _encode_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_frame(pdf, ["conv_id"])
-
-    def _parts(it):
-        buf: pd.DataFrame | None = None
-        for pdf in it:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # rows are (conv, turn) sorted: the last conversation may continue
-            # in the next Arrow batch — hold it back
-            last = pdf["conv_id"].iloc[-1]
-            tail_start = pdf["conv_id"].searchsorted(last, side="left")
-            body, buf = pdf.iloc[:tail_start], pdf.iloc[tail_start:]
-            if len(body):
-                yield _encode_frame(body)
-        if buf is not None and len(buf):
-            yield _encode_frame(buf)
-
-    return base.mapInPandas(_parts, _ENC_SCHEMA)
+def _columns(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(conv_id objects, int64 µs timestamps, float64 values) of a batch."""
+    conv = rb.column(0).to_numpy(zero_copy_only=False)
+    ts = rb.column(1).cast(pa.timestamp("us")).to_numpy(zero_copy_only=False)
+    v = rb.column(2).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return conv, ts.view(np.int64), v
 
 
-def decompress_conversations(enc: DataFrame) -> DataFrame:
-    """Inverse of compress_conversations → (conv_id, ts, value).
-
-    ``mapInPandas`` (not groupBy): blobs are already one-row-per-entity, so
-    decode is embarrassingly parallel per partition — no shuffle, no
-    per-group dispatch overhead."""
-
-    def _batches(it):
-        for pdf in it:
-            if not pdf.empty:
-                yield _decode_enc_pdf(pdf)
-
-    return enc.mapInPandas(_batches, "conv_id string, ts timestamp, value double")
-
-
-def decode_enc_batches_arrow(it):
-    """Arrow decode generator over encoded RecordBatches — shared by
-    :func:`decompress_conversations_arrow` (standalone stage) and the
-    fused roundtrip in ``codec_arrow`` (same bytes in, same rows out)."""
-    import pyarrow as pa
-
-    out_schema = pa.schema(
+def _encode_block(
+    conv: np.ndarray, t: np.ndarray, v: np.ndarray, starts: np.ndarray, chunk: np.ndarray
+) -> pa.RecordBatch:
+    """One encoded row per chunk of a sorted block; ``starts`` are the
+    chunks' first rows and ``chunk`` their chunk_ids."""
+    ends = np.append(starts[1:], len(conv))
+    tbs = encode_ts_shard(t, starts, ends)
+    vbs = encode_vals_shard(v, starts, ends)
+    counts = ends - starts
+    return pa.RecordBatch.from_arrays(
         [
-            pa.field("conv_id", pa.string()),
-            pa.field("ts", pa.timestamp("us")),
-            pa.field("value", pa.float64()),
-        ]
+            pa.array(conv[starts], type=pa.string()),
+            pa.array(chunk, type=pa.int32()),
+            pa.array(counts),
+            pa.array(tbs, type=pa.binary()),
+            pa.array(vbs, type=pa.binary()),
+            pa.array(counts * 16),
+            pa.array([len(a) + len(b) for a, b in zip(tbs, vbs)], type=pa.int64()),
+        ],
+        schema=_ENC_ARROW,
     )
+
+
+def _encode_batches(it, max_rows: int | None = None):
+    """Encoded batches over (conv_id, turn)-sorted point batches.
+
+    A chunk starts at each new conversation and, with ``max_rows``, at
+    every ``max_rows``-th turn of a conversation; chunk_id counts a
+    conversation's chunks from 0. The last conversation of a batch may go
+    on in the next one, so only its whole chunks (none without
+    ``max_rows``) are encoded and the rest is held back: a task holds one
+    batch plus fewer than ``max_rows`` held rows."""
+    m = max_rows or 1 << 62  # no max_rows: one chunk per conversation
+    held = (np.empty(0, object), np.empty(0, np.int64), np.empty(0))  # open chunk
+    open_conv, done = None, 0  # the batch's last conversation, its encoded rows
     for rb in it:
         if rb.num_rows == 0:
             continue
-        convs = rb.column(rb.schema.get_field_index("conv_id"))
-        tbs = rb.column(rb.schema.get_field_index("ts_blob"))
-        vbs = rb.column(rb.schema.get_field_index("val_blob"))
-        tss, vss, lens = [], [], np.empty(rb.num_rows, dtype=np.int64)
-        for g in range(rb.num_rows):
-            t = decode_ts(tbs[g].as_py())
-            vss.append(decode_vals(vbs[g].as_py()))
-            tss.append(t)
-            lens[g] = len(t)
-        # conv_id expanded as a dictionary array: indices repeat, the
-        # string values stay one-per-conversation
-        idx = np.repeat(np.arange(rb.num_rows, dtype=np.int32), lens)
-        conv_col = pa.DictionaryArray.from_arrays(pa.array(idx), convs)
-        ts_col = pa.array(np.concatenate(tss) if tss else np.array([], np.int64)).cast(
-            pa.timestamp("us")
-        )
-        val_col = pa.array(
-            np.concatenate(vss) if vss else np.array([], np.float64)
-        )
+        conv, t, v = (np.concatenate(pair) for pair in zip(held, _columns(rb)))
+        n = len(conv)
+        conv_start = np.flatnonzero(np.append(True, conv[1:] != conv[:-1]))
+        lens = np.diff(conv_start, append=n)
+        pos = np.arange(n) - np.repeat(conv_start, lens)  # turn within conv
+        if conv[0] == open_conv:
+            pos[: lens[0]] += done
+        cut = n - int(pos[-1] + 1) % m
+        if cut:
+            starts = np.flatnonzero(pos[:cut] % m == 0)
+            yield _encode_block(conv[:cut], t[:cut], v[:cut], starts, pos[starts] // m)
+        held = (conv[cut:], t[cut:], v[cut:])
+        open_conv, done = conv[-1], int(pos[-1]) + 1 - (n - cut)
+    if len(held[0]):
+        yield _encode_block(*held, np.zeros(1, np.int64), np.array([done // m]))
+
+
+def _decode_batches(it):
+    """Point batches (conv_id, ts, value) over encoded batches. Each blob
+    is self-contained, so the points come out in blob order."""
+    for rb in it:
+        if rb.num_rows == 0:
+            continue
+        ts = [decode_ts(b) for b in rb.column("ts_blob").to_pylist()]
+        vals = [decode_vals(b) for b in rb.column("val_blob").to_pylist()]
+        lens = np.fromiter(map(len, ts), np.int64, rb.num_rows)
+        conv = rb.column("conv_id").take(np.repeat(np.arange(rb.num_rows), lens))
         yield pa.RecordBatch.from_arrays(
-            [conv_col.cast(pa.string()), ts_col, val_col], schema=out_schema
+            [
+                conv,
+                pa.array(np.concatenate(ts).view("datetime64[us]")),
+                pa.array(np.concatenate(vals)),
+            ],
+            schema=_PTS_ARROW,
         )
 
 
-def decompress_conversations_arrow(enc: DataFrame) -> DataFrame:
-    """Arrow-native decode: ``mapInArrow`` over the blob table (SURVEY.md
-    §2.9's stated kernel surface). Identical output to
-    ``decompress_conversations``; skips the Arrow→pandas→Arrow conversion
-    entirely — the decoded numpy arrays are handed straight back as Arrow
-    arrays (zero-copy for the fixed-width ts/value columns), which matters
-    when decode feeds another JVM stage at 100 TB (no object-dtype
-    materialization of conv_id strings per row on the Python side either:
-    the repeated-key column is built as one DictionaryArray)."""
-    return enc.mapInArrow(
-        decode_enc_batches_arrow, "conv_id string, ts timestamp, value double"
+def _roundtrip_batches(it, max_rows: int | None = None):
+    yield from _decode_batches(_encode_batches(it, max_rows))
+
+
+def compress(df: DataFrame, max_rows: int | None = None) -> DataFrame:
+    """One row per (conv_id, chunk_id): a chunk's turns in turn_idx order
+    as a timestamp blob and a value blob, with raw and encoded bytes (the
+    per-entity lineage metrics). Without ``max_rows`` each conversation is
+    one chunk, chunk_id 0. With it, a chunk holds at most ``max_rows``
+    consecutive turns, so no hot conversation must fit one blob (AISdb's
+    50k batching precedent, aisdb_lib/src/decode.rs:19). Chunks decode by
+    concatenation in chunk_id order. Input needs conv_id, turn_idx, ts and
+    value."""
+    return _sorted_points(df).mapInArrow(
+        partial(_encode_batches, max_rows=max_rows), _ENC_SCHEMA
+    )
+
+
+def decompress(enc: DataFrame) -> DataFrame:
+    """Inverse of :func:`compress` → (conv_id, ts, value). Blobs are
+    self-contained, so decode needs no exchange."""
+    return enc.mapInArrow(_decode_batches, _PTS_SCHEMA)
+
+
+def roundtrip(df: DataFrame, max_rows: int | None = None) -> DataFrame:
+    """``decompress(compress(df, max_rows))`` in one Python stage: the
+    blobs never cross back to the JVM and out again."""
+    return _sorted_points(df).mapInArrow(
+        partial(_roundtrip_batches, max_rows=max_rows), _PTS_SCHEMA
     )

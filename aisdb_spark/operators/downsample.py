@@ -14,8 +14,8 @@ aisdb_db_server.rs:429-495``). Graft set:
   (numpy, no per-row Python).
 
 Scale: every_nth/bucket_first are window/agg on the shared conv_id
-exchange. lttb groups are bounded by prior segmentation; a hot conversation
-is pre-capped by ``plans.partitioning.cap_group_size`` before applyInPandas.
+exchange. lttb groups are bounded by prior segmentation only: a hot
+conversation's segment is one applyInPandas group, however large.
 """
 
 from __future__ import annotations

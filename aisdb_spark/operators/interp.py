@@ -23,9 +23,9 @@ Implementation notes (the byte-match discipline):
 - Timestamps are exact int64 microseconds end-to-end.
 
 Scale: one ``applyInPandas`` over (conv_id, segment_id) groups — group size
-is bounded by prior gap segmentation; pathological hot conversations are
-pre-capped (``plans/partitioning.py``). Arrow batches keep all math in
-numpy; no per-row Python.
+is bounded by prior gap segmentation, not capped: a hot conversation's
+segment is one group. Arrow batches keep all math in numpy; no per-row
+Python.
 """
 
 from __future__ import annotations

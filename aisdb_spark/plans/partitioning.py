@@ -1,4 +1,4 @@
-"""Explicit partitioning, skew handling, and group-size capping.
+"""Explicit partitioning: skew salting and scan spread.
 
 The reference's physical layout doctrine is TimescaleDB's: hash-partition by
 entity, range-chunk by time (``aisdb/aisdb_sql/timescale_createtable_
@@ -6,48 +6,26 @@ dynamic.sql:16-22``: 4 mmsi-hash partitions × 7-day chunks), plus
 memory-adaptive ingest parallelism (``src/lib.rs:154-181``). Spark-first
 equivalents:
 
-- ``repartition_by_conv``: one hash exchange on the entity key that every
-  per-conversation Window/applyInPandas stage downstream reuses.
-- ``detect_hot_convs`` + ``with_salt``: hot conversations (the skew axis —
-  FIXTURES.md plants a 100× conversation) get a salt column derived from
-  ``turn_idx`` so a single entity spreads over ``salt_buckets`` tasks.
-  Salted aggregation must be algebraic: partial-aggregate per
-  (conv, salt), then merge — the rollup measures (count/sum/min/max +
-  boundary-ordered first/last) all compose this way.
-- ``cap_group_size``: AISdb caps work by 50k-row batches
-  (``aisdb_lib/src/decode.rs:19``); here a conversation larger than
-  ``max_rows`` is chunked by in-conversation rank so no single
-  applyInPandas group exceeds task memory. Only valid for chunk-local
-  operators (codec blocks, downsampling within chunk) or composable
-  aggregates — interpolation must instead chunk on segment boundaries.
+- ``with_salt``: hot conversations (the skew axis — FIXTURES.md plants a
+  100× conversation) get a salt column derived from ``turn_idx`` so a
+  single entity spreads over ``salt_buckets`` tasks. Salted aggregation
+  must be algebraic: partial-aggregate per (conv, salt), then merge — the
+  rollup measures (count/sum/min/max + boundary-ordered first/last) all
+  compose this way.
+- ``spread_scan``: a small input that scans as fewer partitions than
+  cores is hash-spread on its key before per-row expression or Python
+  work, so that work does not run single-threaded.
 
 At 100 TB: AQE (`skewJoin`, `coalescePartitions` — enabled in
-``session.py``) covers join/shuffle skew at runtime; these helpers cover
-the one case AQE cannot fix — a single oversized *group* feeding a
-stateful per-group UDF.
+``session.py``) covers join/shuffle skew at runtime; salting covers the
+one case AQE cannot fix — a single oversized *group* feeding a per-group
+aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def repartition_by_conv(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Hash-exchange on conv_id (bucket(conv_id) layout analog)."""
-    if num_partitions:
-        return df.repartition(num_partitions, "conv_id")
-    return df.repartition("conv_id")
-
-
-def detect_hot_convs(df: DataFrame, threshold_rows: int = 100_000) -> DataFrame:
-    """Conversations whose row count exceeds the threshold — a cheap
-    count-sketch pass (the hot-key detection feeding salting decisions)."""
-    return (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .filter(F.col("n_rows") >= threshold_rows)
-    )
 
 
 def with_salt(df: DataFrame, salt_buckets: int = 16, chunk_rows: int = 10_000) -> DataFrame:
@@ -62,12 +40,15 @@ def with_salt(df: DataFrame, salt_buckets: int = 16, chunk_rows: int = 10_000) -
     )
 
 
-def cap_group_size(df: DataFrame, max_rows: int = 50_000) -> DataFrame:
-    """Append ``chunk_id`` so (conv_id, chunk_id) groups have ≤ max_rows
-    rows, chunked by in-conversation rank (stable, deterministic). Use as
-    the applyInPandas grouping key for chunk-local operators."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn(
-        "chunk_id",
-        F.floor((F.row_number().over(w) - 1) / F.lit(max_rows)).cast("int"),
-    )
+def spread_scan(df: DataFrame, key: str) -> DataFrame:
+    """Scale-adaptive scan spread for per-row work that is heavy next to
+    the scan. A small corpus arrives as one parquet row group, so one scan
+    task, and every expression or Python kernel downstream runs
+    single-threaded (measured: the whole LSH signature pass on 1 core at
+    sf0.1). When the scan has fewer partitions than cores, hash-repartition
+    on ``key`` (deterministic, balanced); a large corpus already scans in
+    many splits and takes no shuffle at all."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, key)
+    return df

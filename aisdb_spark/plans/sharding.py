@@ -10,8 +10,8 @@ whole conversation at a time.
 
 Shard count defaults to 4× parallelism — enough tasks to balance while
 keeping per-task overhead amortized over many conversations. Hot
-conversations still bound a single shard's size; cap upstream with
-``partitioning.cap_group_size`` where the kernel permits chunking.
+conversations still bound a single shard's size: a kernel that permits
+chunking must chunk itself (as the codec's ``max_rows`` does).
 """
 
 from __future__ import annotations

@@ -889,7 +889,7 @@ def vw_decimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reproduce (conv_id, ts, value) exactly, so the oracle is a plain SELECT.
 # ---------------------------------------------------------------------------
 
-from aisdb_spark.operators import codec, codec_arrow  # noqa: E402
+from aisdb_spark.operators import codec  # noqa: E402
 
 
 @query(
@@ -902,29 +902,20 @@ SELECT 'chunked' AS variant, conv_id, ts, CAST(value AS DOUBLE) AS value FROM tv
 def gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gorilla delta-of-delta + XOR encode → decode identity
     (codec spec: Pelkonen et al. VLDB'15; layout precedent
-    aisdb/aisdb_sql/timescale_createtable_dynamic.sql:24-29). Two codec
-    routes in one driver row (registry folded round 4):
+    aisdb/aisdb_sql/timescale_createtable_dynamic.sql:24-29). Two chunkings
+    of the one codec route in one registry row:
 
-    - ``arrow``: Arrow-native encode (``mapInArrow``,
-      codec_arrow ``_encode_batches``) → Arrow-native decode
-      (``decode_enc_batches_arrow``) — the registry-default decode path
-      (round-3 verdict item 4; byte-identical to the pandas path per
-      tests/test_codec.py, skips Arrow→pandas→Arrow);
-    - ``chunked``: group-size-capped blobs (max_rows=40 forces multi-chunk
+    - ``arrow``: one blob pair per conversation;
+    - ``chunked``: blobs of at most 40 turns (forces multi-chunk
       conversations; AISdb's 50k batching precedent,
-      aisdb_lib/src/decode.rs:19) → chunk-concatenating decode.
+      aisdb_lib/src/decode.rs:19).
 
-    Round 6: each variant's encode→decode runs FUSED in one Python stage
-    (``roundtrip_partitions_arrow`` / ``roundtrip_conversations_chunked``)
-    — same kernels, same blobs, identical rows, but the encoded bytes no
-    longer cross the JVM↔Python boundary twice per variant (guide §4)."""
+    Each runs encode → decode in one ``mapInArrow`` stage
+    (``codec.roundtrip``), so the encoded bytes cross the JVM↔Python
+    boundary once."""
     tv = _tv(spark, sf_dir)
-    whole = codec_arrow.roundtrip_partitions_arrow(tv).withColumn(
-        "variant", F.lit("arrow")
-    )
-    chunked = codec.roundtrip_conversations_chunked(tv, max_rows=40).withColumn(
-        "variant", F.lit("chunked")
-    )
+    whole = codec.roundtrip(tv).withColumn("variant", F.lit("arrow"))
+    chunked = codec.roundtrip(tv, 40).withColumn("variant", F.lit("chunked"))
     return whole.unionByName(chunked)
 
 
@@ -1016,7 +1007,7 @@ def gorilla_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio (the decode-rate metrics analog, aisdb_lib/src/decode.rs:228-257).
     The oracle recomputes the codec's exact wire size bit-by-bit in DuckDB
     SQL (_GORILLA_SIZE_ORACLE), so enc_bytes is hash-checked, not trusted."""
-    enc = codec_arrow.compress_partitions_arrow(_tv(spark, sf_dir))
+    enc = codec.compress(_tv(spark, sf_dir))
     return enc.select(
         "conv_id",
         "n_points",

@@ -20,6 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aisdb_spark.plans.partitioning import spread_scan
 from aisdb_spark.sources.normalize import read_parquet
 
 
@@ -184,19 +185,6 @@ def _band_key_expr(planes: np.ndarray, band: int, r: int, duck: bool) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _spread_scan(df: DataFrame, key: str = "vec_id") -> DataFrame:
-    """Scale-adaptive scan spread (same rationale as textops._spread_scan):
-    a small corpus arrives as one parquet row group → one scan task → the
-    per-row fold expressions (16-64 dot products per row) run
-    single-threaded. Hash-repartition only when the scan has fewer
-    partitions than cores; large corpora take no extra shuffle."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, key)
-    return df
-
-
 def cosine_band_rows(
     emb: DataFrame, planes: np.ndarray, r: int, b: int
 ) -> DataFrame:
@@ -259,7 +247,7 @@ def cosine_near_pairs(
     # sqrt(dot) fold below the spread exchange, evaluating it twice (once
     # on the unspread scan). A null embedding yields a null dot → null
     # cos → dropped either way, so results are unchanged.
-    emb = _spread_scan(emb0).select(
+    emb = spread_scan(emb0, "vec_id").select(
         "vec_id",
         "embedding",
         F.expr(

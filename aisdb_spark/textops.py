@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aisdb_spark.plans.partitioning import spread_scan
+
 # 8 minhash permutations over P = 2^31-1 (products stay < 2^62: int64-safe).
 MINHASH_P = 2_147_483_647
 MINHASH_COEFFS = [
@@ -203,22 +205,6 @@ def text_analysis_select(duck: bool) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _spread_scan(docs: DataFrame) -> DataFrame:
-    """Scale-adaptive scan spread for expression-heavy per-row work.
-
-    Small corpora arrive as one parquet row group → one scan task → every
-    md5/shingle expression runs single-threaded (measured: the whole LSH
-    signature pass on 1 core at sf0.1). When the scan has fewer partitions
-    than cores, hash-repartition on doc_id (deterministic, balanced); a
-    large corpus already scans in many splits and takes no shuffle at all.
-    """
-    spark = docs.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        return docs.repartition(target, "doc_id")
-    return docs
-
-
 # Expression-form shingle pipeline: the token array is bound ONCE per row
 # as the single element of an outer ``transform(array(split(...)), t -> …)``
 # — a lambda variable is evaluated once and referenced many times, unlike a
@@ -258,7 +244,7 @@ def with_minhash(docs: DataFrame) -> DataFrame:
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
     return (
-        _spread_scan(docs)
+        spread_scan(docs, "doc_id")
         .withColumn("_hs", F.expr(_SHINGLE_HASHES_EXPR))
         .select("*", *sig_cols)
         .drop("_hs")
@@ -270,7 +256,7 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
     the expression shingle list (downstream uses only intersect/union
     sizes, so set order is immaterial — same contract as the previous
     collect_set form, minus its explode + aggregation shuffle)."""
-    return _spread_scan(docs).select(
+    return spread_scan(docs, "doc_id").select(
         "doc_id", F.expr(_SHINGLE_SET_EXPR).alias("sh")
     )
 
@@ -290,7 +276,7 @@ def _sigs_with_hs(docs: DataFrame) -> DataFrame:
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
     return (
-        _spread_scan(docs)
+        spread_scan(docs, "doc_id")
         .withColumn("_hs", F.expr(_SHINGLE_HASHES_EXPR))
         .select("doc_id", "_hs", *sig_cols)
     )
@@ -413,7 +399,7 @@ def _simhash_sigs(docs: DataFrame) -> DataFrame:
         for j in range(SIMHASH_BITS)
     )
     return (
-        _spread_scan(docs)
+        spread_scan(docs, "doc_id")
         .withColumn("_hs", F.expr(hs_expr))
         .withColumn("_c", F.expr(cnt_expr))
         .withColumn("simhash", F.expr(f"({assemble})"))

@@ -61,7 +61,6 @@ try:  # best-effort preload — absence only costs the old per-worker import
     import aisdb_spark.multimodal  # noqa: F401
     import aisdb_spark.operators.asof  # noqa: F401
     import aisdb_spark.operators.codec  # noqa: F401
-    import aisdb_spark.operators.codec_arrow  # noqa: F401
     import aisdb_spark.operators.downsample  # noqa: F401
     import aisdb_spark.operators.encoder  # noqa: F401
     import aisdb_spark.operators.interp  # noqa: F401

@@ -77,7 +77,7 @@ HEADLINE = [
 # (round-4 registry fold): their absolute time covers MORE work than the
 # same key did in BENCH_r01-r03 — annotate so growth isn't misread
 QUERY_VARIANTS = {
-    "gorilla_roundtrip": "2 codec passes: arrow mapInArrow + chunked pandas",
+    "gorilla_roundtrip": "2 codec passes: whole and 40-turn chunks, mapInArrow",
     "salted_rollup_1min": "2 inputs: uniform + adversarial-skew union",
     "turn_deltas": "+4 scalar-surface columns (shiftcoord/dt_2_epoch/sanitize)",
     "streaming_user_sessions": "adaptive-horizon bookkeeping since r4",

@@ -1,4 +1,4 @@
-"""Ingest twin of bench_large.py: the decode-rate analog at scale.
+"""Ingest bench: the decode-rate analog at scale.
 
 The reference's headline ingest metric is its decoder's rows/sec
 (``aisdb_lib/src/decode.rs:228-257`` prints a decode rate per file batch);
@@ -22,7 +22,7 @@ level:
   100 TB landing zone is free.
 
 Inputs are generated once (deterministically, from the same replicated
-sf0.1 corpus as bench_large.py) into SPARK_GRAFT_INGEST_DIR
+sf0.1 corpus as bench_scaling.py) into SPARK_GRAFT_INGEST_DIR
 (default /tmp/ingest_bench_data) and reused across levels; prep time is
 reported separately and excluded from the stage timings. Files sit in
 page cache on this box, so the stages measure parse/decompress compute —

@@ -59,7 +59,7 @@ def _best_of(fn, reps: int = 3) -> float:
 
 def worker(cpus: int) -> None:
     from aisdb_spark import checkpoint
-    from aisdb_spark.operators import codec_arrow, rollup, segmentation
+    from aisdb_spark.operators import codec, rollup, segmentation
     from aisdb_spark.session import get_spark
 
     spark = get_spark(f"scaling-{cpus}", cpus=cpus, shuffle_partitions=cpus * 2)
@@ -94,9 +94,7 @@ def worker(cpus: int) -> None:
         "gap_segmentation": lambda: noop(
             segmentation.segment_bounds(segmentation.gap_split(tv, 3600))
         ),
-        "gorilla_compress": lambda: noop(
-            codec_arrow.compress_partitions_arrow(tv, assume_partitioned=True)
-        ),
+        "gorilla_compress": lambda: noop(codec.compress(tv)),
         "cascade_materialized": lambda: cascade_write(),
     }
     result: dict = {"cpus": cpus, "n_turns": n, "stages": {}}

@@ -1,4 +1,4 @@
-"""Streaming-drain twin of bench_large.py (round-3 verdict item 5).
+"""Streaming-drain bench at 20M events (round-3 verdict item 5).
 
 The two registry drain queries are only measured at sf0.1, where harness
 overhead dominates (they regressed to ~4.6 s there when round 3 replaced

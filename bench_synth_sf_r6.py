@@ -10,7 +10,8 @@ Replication rules (REPS copies of every fact table):
 - events: user_id / event_id offset per replica (key space grows with
   data, same principle as bench_scaling.build_corpus);
 - documents: doc_id offset; text gets a per-replica token appended so
-  replicas are near- (not exact-) duplicates;
+  replicas are near- (not exact-) duplicates, and n_chars is recomputed
+  so that n_chars == utf8_length(text) holds as in the source;
 - embeddings: vec_id offset (vectors unchanged — conservative for the
   LSH families: replicas share buckets);
 - orders/lineitem: o_orderkey / l_orderkey offset;
@@ -52,6 +53,10 @@ def repl(name: str, offsets: dict, textcol: str | None = None) -> None:
                 pc.cast(t.column(textcol), pa.string()), f" rep{r}", " "
             )
             t = t.set_column(idx, textcol, suffixed)
+            # the text table's n_chars is utf8_length(text) in the source
+            idx = t.schema.get_field_index("n_chars")
+            n_chars = pc.cast(pc.utf8_length(suffixed), t.schema.field(idx).type)
+            t = t.set_column(idx, "n_chars", n_chars)
         outs.append(t)
     big = pa.concat_tables(outs)
     pq.write_table(big, f"{DST}/{name}.parquet")

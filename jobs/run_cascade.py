@@ -82,7 +82,7 @@ def main() -> None:
             maintenance_report["retention"] = maintenance.enforce_retention(
                 tier_dirs, cutoffs
             )
-    enc = codec.compress_conversations(tv)
+    enc = codec.compress(tv)
     stats = enc.agg(
         {"n_points": "sum", "raw_bytes": "sum", "enc_bytes": "sum"}
     ).collect()[0]

@@ -113,24 +113,6 @@ def test_salted_rollup_equivalence(spark, synth):
     assert direct.exceptAll(merged).count() == 0
 
 
-def test_cap_group_size(spark, synth):
-    tv = _tv(synth)
-    capped = partitioning.cap_group_size(tv, max_rows=50)
-    sizes = capped.groupBy("conv_id", "chunk_id").count()
-    assert sizes.agg(F.max("count")).collect()[0][0] <= 50
-    # hot conversation split into multiple chunks
-    hot_chunks = capped.filter(F.col("conv_id") == "syn-001").select(
-        "chunk_id"
-    ).distinct().count()
-    assert hot_chunks >= 8
-
-
-def test_detect_hot_convs(spark, synth):
-    hot = partitioning.detect_hot_convs(synth, threshold_rows=300)
-    ids = [r.conv_id for r in hot.collect()]
-    assert ids == ["syn-001"]
-
-
 def test_cascade_partition_invariance(spark, synth):
     """Byte-match across parallelism: the cascade output is identical no
     matter how the input is partitioned (the north rule's two-cluster-size

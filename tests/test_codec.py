@@ -1,9 +1,11 @@
 """Gorilla codec: bit-level round-trip identity (FIXTURES.md golden #4),
-pure-python fuzz + Spark end-to-end."""
+pure-python fuzz, the batch carry loop against the reference encoders,
+and Spark end-to-end."""
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from aisdb_spark.operators.codec import (
@@ -48,58 +50,6 @@ def test_codec_compresses_regular_series():
     assert 5000 * 8 / len(encode_vals(v)) > 3
 
 
-def test_spark_roundtrip_identity(spark, synth):
-    from aisdb_spark.operators import codec, dedup
-    from aisdb_spark.sources.transcripts import with_value
-
-    tv = with_value(dedup.dedup_turns(synth)).filter(F.col("value").isNotNull())
-    enc = codec.compress_conversations(tv)
-    dec = codec.decompress_conversations(enc)
-    src = tv.select("conv_id", "ts", F.col("value").cast("double").alias("value"))
-    assert dec.count() == src.count()
-    assert dec.exceptAll(src).count() == 0
-    assert src.exceptAll(dec).count() == 0
-
-
-def test_chunked_roundtrip_identity(spark, synth):
-    """Oversized conversations are chunked (group-size cap) and the chunked
-    blobs decode back to the identical series."""
-    from aisdb_spark.operators import codec, dedup
-    from aisdb_spark.sources.transcripts import with_value
-
-    tv = with_value(dedup.dedup_turns(synth)).filter(F.col("value").isNotNull())
-    enc = codec.compress_conversations_chunked(tv, max_rows=64)
-    # the hot conversation (400 turns) must split into multiple chunks
-    hot_chunks = enc.filter(F.col("conv_id") == "syn-001").count()
-    assert hot_chunks >= 6
-    dec = codec.decompress_conversations_chunked(enc)
-    src = tv.select("conv_id", "ts", F.col("value").cast("double").alias("value"))
-    assert dec.count() == src.count()
-    assert dec.exceptAll(src).count() == 0 and src.exceptAll(dec).count() == 0
-
-
-def test_compress_partitions_zero_shuffle_identity(spark, synth):
-    """The zero-shuffle (bucketed-storage) codec path produces the same
-    blobs-decode-to-identity result as the grouped path."""
-    from aisdb_spark.operators import codec, dedup
-    from aisdb_spark.sources.transcripts import with_value
-
-    tv = with_value(dedup.dedup_turns(synth)).filter(F.col("value").isNotNull())
-    enc = codec.compress_partitions(tv)
-    dec = codec.decompress_conversations(enc)
-    src = tv.select("conv_id", "ts", F.col("value").cast("double").alias("value"))
-    assert enc.count() == tv.select("conv_id").distinct().count()
-    assert dec.exceptAll(src).count() == 0 and src.exceptAll(dec).count() == 0
-    # cross-batch carry-over actually exercised: force tiny Arrow batches
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
-    try:
-        enc2 = codec.compress_partitions(tv)
-        dec2 = codec.decompress_conversations(enc2)
-        assert dec2.exceptAll(src).count() == 0 and src.exceptAll(dec2).count() == 0
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-
-
 def test_shard_encoder_byte_identical_to_reference_kernel():
     """The vectorized whole-shard encoder must produce byte-identical blobs
     to the per-conversation reference kernel (same wire format, same strict
@@ -135,57 +85,123 @@ def test_shard_encoder_byte_identical_to_reference_kernel():
         assert np.array_equal(C.decode_vals(vbs[g]), vs_list[g])
 
 
-def test_arrow_decode_equals_pandas_decode(spark, synth):
-    from aisdb_spark.operators import codec, dedup
+def test_encode_batches_blob_identical_to_reference():
+    """The carry loop over Arrow batches of 1-40 rows emits, for every
+    (conversation, chunk), exactly the reference encoders' blobs of that
+    slice, whatever the batch cuts, and decodes back to the input."""
+    from aisdb_spark.operators import codec as C
+
+    rng = np.random.default_rng(11)
+    sizes = [1, 1, 2, 3, 7, 40, 41, 130, 5, 1, 64, 9]
+    conv = np.concatenate([[f"c{i:02d}"] * m for i, m in enumerate(sizes)])
+    t = np.concatenate(
+        [
+            1_700_000_000_000_000 + np.cumsum(rng.integers(1, 300_000_000, m))
+            for m in sizes
+        ]
+    ).astype(np.int64)
+    t[200:] += 1 << 40  # a 64-bit dod class inside the 130-turn conversation
+    v = rng.integers(10, 300, len(t)).astype(np.float64)
+    v[50:60] = v[49]  # xor-zero runs
+    v[::17] = np.inf
+    v[5::23] = -0.0
+    points = pa.table(
+        {
+            "conv_id": conv,
+            "ts": pa.array(t.view("datetime64[us]")).cast(pa.timestamp("us", tz="UTC")),
+            "value": v,
+        }
+    )
+    for max_rows in (None, 1, 3, 7, 40):
+        for _ in range(4):
+            bounds = [0]
+            while bounds[-1] < len(t):
+                bounds.append(min(bounds[-1] + int(rng.integers(1, 41)), len(t)))
+            batches = [
+                points.slice(a, b - a).to_batches()[0]
+                for a, b in zip(bounds[:-1], bounds[1:])
+            ]
+            enc = pa.Table.from_batches(
+                list(C._encode_batches(iter(batches), max_rows)), C._ENC_ARROW
+            )
+            expect, start = [], 0
+            for i, m in enumerate(sizes):
+                step = max_rows or m
+                for k, a in enumerate(range(start, start + m, step)):
+                    b = min(a + step, start + m)
+                    tb, vb = C.encode_ts(t[a:b]), C.encode_vals(v[a:b])
+                    expect.append(
+                        (f"c{i:02d}", k, b - a, tb, vb, 16 * (b - a), len(tb) + len(vb))
+                    )
+                start += m
+            got = [tuple(r.values()) for r in enc.to_pylist()]
+            assert got == expect, (max_rows, bounds)
+            dec = pa.Table.from_batches(list(C._decode_batches(enc.to_batches())))
+            assert dec.column("conv_id").to_pylist() == conv.tolist()
+            assert np.array_equal(dec.column("ts").to_numpy().view(np.int64), t)
+            assert np.array_equal(
+                dec.column("value").to_numpy().view(np.uint64), v.view(np.uint64)
+            )
+
+
+def _points(synth):
+    from aisdb_spark.operators import dedup
     from aisdb_spark.sources.transcripts import with_value
 
     tv = with_value(dedup.dedup_turns(synth)).filter(F.col("value").isNotNull())
-    enc = codec.compress_conversations(tv).cache()
-    via_pandas = codec.decompress_conversations(enc)
-    via_arrow = codec.decompress_conversations_arrow(enc)
-    assert via_arrow.schema == via_pandas.schema
-    assert via_arrow.count() == via_pandas.count()
-    assert via_arrow.exceptAll(via_pandas).count() == 0
+    src = tv.select("conv_id", "ts", F.col("value").cast("double").alias("value"))
+    return tv, src
+
+
+def _same_rows(a, b) -> bool:
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_spark_roundtrip_identity(spark, synth):
+    from aisdb_spark.operators import codec
+
+    tv, src = _points(synth)
+    enc = codec.compress(tv).cache()
+    # one blob pair per conversation without max_rows
+    assert enc.count() == tv.select("conv_id").distinct().count()
+    assert enc.filter(F.col("chunk_id") != 0).count() == 0
+    dec = codec.decompress(enc)
+    assert dec.count() == src.count()
+    assert _same_rows(dec, src)
     enc.unpersist()
 
 
-def test_arrow_encoder_blob_identical_to_pandas_encoder(spark, synth):
-    """mapInArrow encode (codec_arrow) must emit byte-identical blobs to the
-    mapInPandas path — same wire format, same shard kernels."""
-    from aisdb_spark.operators import codec, codec_arrow, dedup
-    from aisdb_spark.sources.transcripts import with_value
+def test_chunked_roundtrip_identity(spark, synth):
+    """Oversized conversations are chunked inside the carry loop: with
+    Arrow batches of 37 rows and chunks of at most 64 turns, the hot
+    conversation (400 turns) spans batches and chunks, its chunk_ids run
+    0, 1, 2, ... with no gap, and every route decodes to the input."""
+    from aisdb_spark.operators import codec
 
-    tv = with_value(dedup.dedup_turns(synth)).filter(F.col("value").isNotNull())
-    a = {
-        r["conv_id"]: (bytes(r["ts_blob"]), bytes(r["val_blob"]), r["n_points"])
-        for r in codec_arrow.compress_partitions_arrow(tv).collect()
-    }
-    b = {
-        r["conv_id"]: (bytes(r["ts_blob"]), bytes(r["val_blob"]), r["n_points"])
-        for r in codec.compress_partitions(tv).collect()
-    }
-    assert a == b and len(a) > 0
+    tv, src = _points(synth)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        enc = codec.compress(tv, max_rows=64).cache()
+        hot = enc.filter(F.col("conv_id") == "syn-001").collect()
+        n_hot = src.filter(F.col("conv_id") == "syn-001").count()
+        assert n_hot > 5 * 64
+        assert sorted(r["chunk_id"] for r in hot) == list(range(-(-n_hot // 64)))
+        assert enc.agg(F.max("n_points")).collect()[0][0] <= 64
+        dec = codec.decompress(enc)
+        assert dec.count() == src.count()
+        assert _same_rows(dec, src)
+        assert _same_rows(codec.roundtrip(tv, 64), dec)
+        enc.unpersist()
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_fused_roundtrips_equal_two_stage(spark, synth):
-    """The round-6 fused encode→decode stages (one Python stage per
-    variant) return exactly the rows of the two-stage pipelines they
-    replace in gorilla_roundtrip."""
-    from aisdb_spark.operators import codec, codec_arrow, dedup
-    from aisdb_spark.sources.transcripts import with_value
+    """The fused encode→decode stage returns exactly the rows of the two
+    stages it replaces, for whole conversations as well."""
+    from aisdb_spark.operators import codec
 
-    tv = with_value(dedup.dedup_turns(synth)).filter(F.col("value").isNotNull())
-
-    two_stage_arrow = codec.decompress_conversations_arrow(
-        codec_arrow.compress_partitions_arrow(tv)
-    )
-    fused_arrow = codec_arrow.roundtrip_partitions_arrow(tv)
-    assert fused_arrow.exceptAll(two_stage_arrow).count() == 0
-    assert two_stage_arrow.exceptAll(fused_arrow).count() == 0
-
-    two_stage_chunked = codec.decompress_conversations_chunked(
-        codec.compress_conversations_chunked(tv, max_rows=40)
-    )
-    fused_chunked = codec.roundtrip_conversations_chunked(tv, max_rows=40)
-    assert fused_chunked.exceptAll(two_stage_chunked).count() == 0
-    assert two_stage_chunked.exceptAll(fused_chunked).count() == 0
+    tv, _ = _points(synth)
+    assert _same_rows(codec.roundtrip(tv), codec.decompress(codec.compress(tv)))

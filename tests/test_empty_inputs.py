@@ -49,9 +49,9 @@ def test_all_operators_on_empty(spark):
     assert interp.ewma(tv).count() == 0
     assert interp.interp_spacing(tv, 10).count() == 0
     assert encoder.encode_pathways(tv).count() == 0
-    enc = codec.compress_conversations(tv)
+    enc = codec.compress(tv)
     assert enc.count() == 0
-    assert codec.decompress_conversations(enc).count() == 0
+    assert codec.decompress(enc).count() == 0
 
 
 def test_round2_modules_on_empty(spark, tmp_path):
