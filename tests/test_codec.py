@@ -171,6 +171,29 @@ def test_spark_roundtrip_identity(spark, synth):
     enc.unpersist()
 
 
+def test_compress_partitions_zero_shuffle_identity(spark, synth):
+    """Whole-conversation blobs carried across Arrow batches: with batches
+    of 37 rows a conversation spans several batches, yet it still comes
+    out as one blob (chunk_id 0) that decodes to the input."""
+    from aisdb_spark.operators import codec
+
+    tv, src = _points(synth)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        enc = codec.compress(tv).cache()
+        assert enc.count() == tv.select("conv_id").distinct().count()
+        assert enc.filter(F.col("chunk_id") != 0).count() == 0
+        assert enc.agg(F.max("n_points")).collect()[0][0] > 37
+        dec = codec.decompress(enc)
+        assert _same_rows(dec, src)
+        assert _same_rows(codec.roundtrip(tv), dec)
+        enc.unpersist()
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_chunked_roundtrip_identity(spark, synth):
     """Oversized conversations are chunked inside the carry loop: with
     Arrow batches of 37 rows and chunks of at most 64 turns, the hot
