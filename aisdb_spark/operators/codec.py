@@ -17,9 +17,10 @@ implemented (Facebook Gorilla, Pelkonen et al., VLDB 2015):
 Encode side is numpy-vectorized (deltas, XORs, leading/trailing zero counts,
 bit matrix assembly via ``np.packbits``); the only per-element work is the
 sequential decode state machine — inherent to the format, bounded per
-conversation. In Spark the codec is one route: the JVM hash-partitions the
-points by conv_id and sorts them by turn, and one ``mapInArrow`` stage
-encodes (:func:`compress`), decodes (:func:`decompress`) or does both
+conversation. In Spark the codec runs on the per-entity route of
+:mod:`aisdb_spark.plans.per_entity`: the JVM hash-partitions the points by
+conv_id and sorts them by turn, and one ``mapInArrow`` stage encodes
+(:func:`compress`), decodes (:func:`decompress`) or does both
 (:func:`roundtrip`) over the sorted Arrow batches. A production deployment
 would swap the inner kernels for a native library with the same wire format.
 
@@ -36,6 +37,8 @@ from functools import partial
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from aisdb_spark.plans import per_entity
 
 # ---------------------------------------------------------------------------
 # bit packing helpers (vectorized)
@@ -483,27 +486,6 @@ _PTS_ARROW = pa.schema(
 )
 
 
-def _sorted_points(df: DataFrame) -> DataFrame:
-    """(conv_id, ts, value) hash-partitioned on conv_id and sorted by
-    (conv_id, turn_idx) within each partition: every conversation reaches
-    one task whole and in turn order. turn_idx is dropped after the sort,
-    one column less through the Arrow pipe."""
-    spark = df.sparkSession
-    # explicit count: AQE coalesces a bare repartition("conv_id") to
-    # JVM-sized (~1 MB) partitions, which at small inputs runs the whole
-    # Python stage on one worker
-    n = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        spark.sparkContext.defaultParallelism,
-    )
-    return (
-        df.select("conv_id", "turn_idx", "ts", "value")
-        .repartition(n, "conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .select("conv_id", "ts", "value")
-    )
-
-
 def _columns(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(conv_id objects, int64 µs timestamps, float64 values) of a batch."""
     conv = rb.column(0).to_numpy(zero_copy_only=False)
@@ -536,35 +518,10 @@ def _encode_block(
 
 
 def _encode_batches(it, max_rows: int | None = None):
-    """Encoded batches over (conv_id, turn)-sorted point batches.
-
-    A chunk starts at each new conversation and, with ``max_rows``, at
-    every ``max_rows``-th turn of a conversation; chunk_id counts a
-    conversation's chunks from 0. The last conversation of a batch may go
-    on in the next one, so only its whole chunks (none without
-    ``max_rows``) are encoded and the rest is held back: a task holds one
-    batch plus fewer than ``max_rows`` held rows."""
-    m = max_rows or 1 << 62  # no max_rows: one chunk per conversation
-    held = (np.empty(0, object), np.empty(0, np.int64), np.empty(0))  # open chunk
-    open_conv, done = None, 0  # the batch's last conversation, its encoded rows
-    for rb in it:
-        if rb.num_rows == 0:
-            continue
-        conv, t, v = (np.concatenate(pair) for pair in zip(held, _columns(rb)))
-        n = len(conv)
-        conv_start = np.flatnonzero(np.append(True, conv[1:] != conv[:-1]))
-        lens = np.diff(conv_start, append=n)
-        pos = np.arange(n) - np.repeat(conv_start, lens)  # turn within conv
-        if conv[0] == open_conv:
-            pos[: lens[0]] += done
-        cut = n - int(pos[-1] + 1) % m
-        if cut:
-            starts = np.flatnonzero(pos[:cut] % m == 0)
-            yield _encode_block(conv[:cut], t[:cut], v[:cut], starts, pos[starts] // m)
-        held = (conv[cut:], t[cut:], v[cut:])
-        open_conv, done = conv[-1], int(pos[-1]) + 1 - (n - cut)
-    if len(held[0]):
-        yield _encode_block(*held, np.zeros(1, np.int64), np.array([done // m]))
+    """Encoded batches over (conv_id, turn)-sorted point batches: one row
+    per chunk that :func:`~aisdb_spark.plans.per_entity.chunks` cuts."""
+    for rb, starts, chunk_ids in per_entity.chunks(it, max_rows):
+        yield _encode_block(*_columns(rb), starts, chunk_ids)
 
 
 def _decode_batches(it):
@@ -600,9 +557,8 @@ def compress(df: DataFrame, max_rows: int | None = None) -> DataFrame:
     50k batching precedent, aisdb_lib/src/decode.rs:19). Chunks decode by
     concatenation in chunk_id order. Input needs conv_id, turn_idx, ts and
     value."""
-    return _sorted_points(df).mapInArrow(
-        partial(_encode_batches, max_rows=max_rows), _ENC_SCHEMA
-    )
+    points = per_entity.sorted_by(df, "conv_id", ["turn_idx"], ["ts", "value"])
+    return points.mapInArrow(partial(_encode_batches, max_rows=max_rows), _ENC_SCHEMA)
 
 
 def decompress(enc: DataFrame) -> DataFrame:
@@ -614,6 +570,5 @@ def decompress(enc: DataFrame) -> DataFrame:
 def roundtrip(df: DataFrame, max_rows: int | None = None) -> DataFrame:
     """``decompress(compress(df, max_rows))`` in one Python stage: the
     blobs never cross back to the JVM and out again."""
-    return _sorted_points(df).mapInArrow(
-        partial(_roundtrip_batches, max_rows=max_rows), _PTS_SCHEMA
-    )
+    points = per_entity.sorted_by(df, "conv_id", ["turn_idx"], ["ts", "value"])
+    return points.mapInArrow(partial(_roundtrip_batches, max_rows=max_rows), _PTS_SCHEMA)

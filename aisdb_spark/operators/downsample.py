@@ -9,13 +9,17 @@ aisdb_db_server.rs:429-495``). Graft set:
   turn_idx holes) — pure Window, SQL-expressible, the cheap path.
 - ``bucket_first``: keep the first turn of each time bucket — grid
   downsampling, pure built-ins.
-- ``lttb``: Largest-Triangle-Three-Buckets per (conv, segment) — the
-  perceptual decimation slot of VW, as a vectorized ``applyInPandas``
-  (numpy, no per-row Python).
+- ``lttb``: Largest-Triangle-Three-Buckets per conversation — the
+  perceptual decimation slot of VW, a vectorized numpy kernel (no per-row
+  Python);
+- ``vw_decimate``: true Visvalingam-Whyatt per conversation.
 
 Scale: every_nth/bucket_first are window/agg on the shared conv_id
-exchange. lttb groups are bounded by prior segmentation only: a hot
-conversation's segment is one applyInPandas group, however large.
+exchange. lttb and vw_decimate run on the per-entity route of
+:mod:`aisdb_spark.plans.per_entity`: one ``mapInArrow`` stage over
+conv_id-sorted Arrow batches, the kernel called once per whole
+conversation. A task holds one batch plus the open conversation; a hot
+conversation is held whole, however large.
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from aisdb_spark.plans.per_entity import apply_per_entity
 
 
 def every_nth(df: DataFrame, n: int) -> DataFrame:
@@ -67,21 +73,19 @@ def vw_decimate(df: DataFrame, min_area2: int = 100_000_000) -> DataFrame:
     - ties break to the LOWEST surviving index.
 
     Implementation: lazy min-heap over (area, index) with a doubly-linked
-    alive list — O(m log m) per conversation, numpy + heapq inside one
-    ``applyInPandas`` batch (the elimination order is inherently
-    sequential, exactly as the reference's Rust loop; neighbours are the
-    only areas that change per removal). Groups are hash-shard
-    super-groups via plans.sharding, same as every stateful operator."""
+    alive list — O(m log m) per conversation, numpy + heapq, one call per
+    conversation on the per-entity route (plans.per_entity). The
+    elimination order is inherently sequential, exactly as the
+    reference's Rust loop; neighbours are the only areas that change per
+    removal."""
     out_schema = "conv_id string, turn_idx int, ts timestamp, value long"
-    cols = ["conv_id", "turn_idx", "ts", "value"]
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
         import heapq
 
-        pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
         m = len(pdf)
         if m <= 2:
-            return pdf[cols]
+            return pdf
         us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         x = (us - us.min()) // 1000
         y = pdf["value"].to_numpy(dtype=np.int64)
@@ -112,12 +116,10 @@ def vw_decimate(df: DataFrame, min_area2: int = 100_000_000) -> DataFrame:
                 if 0 < j < m - 1 and alive[j]:
                     ver[j] += 1
                     heapq.heappush(heap, (area2(j), j, int(ver[j])))
-        return pdf.iloc[np.flatnonzero(alive)][cols]
+        return pdf.iloc[np.flatnonzero(alive)]
 
-    from aisdb_spark.plans.sharding import apply_per_conv
-
-    return apply_per_conv(
-        df.select("conv_id", "turn_idx", "ts", "value"), _one, out_schema
+    return apply_per_entity(
+        df.select("conv_id", "turn_idx", "ts", "value"), _one, out_schema, order=["turn_idx"]
     )
 
 
@@ -147,10 +149,9 @@ def lttb(df: DataFrame, n_out: int = 64) -> DataFrame:
     out_schema = "conv_id string, turn_idx int, ts timestamp, value long"
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
         m = len(pdf)
         if m <= n_out:
-            return pdf[["conv_id", "turn_idx", "ts", "value"]]
+            return pdf
         us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         x = (us - us.min()) // 1000  # relative ms, int64
         y = pdf["value"].to_numpy(dtype=np.int64)
@@ -172,10 +173,8 @@ def lttb(df: DataFrame, n_out: int = 64) -> DataFrame:
             a = lo + int(np.argmax(area))
             keep.append(a)
         keep.append(m - 1)
-        return pdf.iloc[sorted(set(keep))][["conv_id", "turn_idx", "ts", "value"]]
+        return pdf.iloc[sorted(set(keep))]
 
-    from aisdb_spark.plans.sharding import apply_per_conv
-
-    return apply_per_conv(
-        df.select("conv_id", "turn_idx", "ts", "value"), _one, out_schema
+    return apply_per_entity(
+        df.select("conv_id", "turn_idx", "ts", "value"), _one, out_schema, order=["turn_idx"]
     )

@@ -14,9 +14,10 @@ sharing one id) into distinct labeled pathways.
 Graft domain: positions → value series; distance → |Δvalue|; speed →
 |Δvalue|/Δt_seconds.
 
-Spark shape: inherently sequential per entity ⇒ ``applyInPandas`` per
-conversation with an O(segments × pathways) numpy loop — per-group state is
-tiny (one boundary point per pathway), group size bounded by segmentation.
+Spark shape: inherently sequential per entity ⇒ one kernel call per whole
+conversation on the per-entity route (``plans.per_entity``), with an
+O(segments × pathways) numpy loop — per-conversation state is tiny (one
+boundary point per pathway).
 No oracle (imperative greedy state machine); golden unit tests instead.
 """
 
@@ -25,7 +26,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from aisdb_spark.plans.per_entity import apply_per_entity
 
 _OUT_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, value long, pathway_id int"
@@ -86,14 +88,10 @@ def encode_pathways(
     """Append ``pathway_id`` per row (requires ts + value)."""
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
         t = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         v = pdf["value"].to_numpy()
-        pdf["pathway_id"] = _encode_conv(t, v, max_jump, max_rate, minscore)
-        return pdf[["conv_id", "turn_idx", "ts", "value", "pathway_id"]]
+        return pdf.assign(pathway_id=_encode_conv(t, v, max_jump, max_rate, minscore))
 
-    from aisdb_spark.plans.sharding import apply_per_conv
-
-    return apply_per_conv(
-        df.select("conv_id", "turn_idx", "ts", "value"), _one, _OUT_SCHEMA
+    return apply_per_entity(
+        df.select("conv_id", "turn_idx", "ts", "value"), _one, _OUT_SCHEMA, order=["turn_idx"]
     )

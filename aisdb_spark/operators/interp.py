@@ -1,4 +1,4 @@
-"""Gap-fill interpolation and smoothing — vectorized applyInPandas.
+"""Gap-fill interpolation and smoothing — per-conversation numpy kernels.
 
 Re-expresses AISdb's interpolation family (``aisdb/interp.py``):
 
@@ -22,10 +22,12 @@ Implementation notes (the byte-match discipline):
   results are bit-equal across engines.
 - Timestamps are exact int64 microseconds end-to-end.
 
-Scale: one ``applyInPandas`` over (conv_id, segment_id) groups — group size
-is bounded by prior gap segmentation, not capped: a hot conversation's
-segment is one group. Arrow batches keep all math in numpy; no per-row
-Python.
+Scale: the kernels run on the per-entity route of
+:mod:`aisdb_spark.plans.per_entity` — one ``mapInArrow`` stage over
+conv_id-sorted Arrow batches, each kernel called once per whole
+conversation with a numpy loop over its segments. A task holds one Arrow
+batch plus the open conversation; a hot conversation is held whole. All
+math is numpy; no per-row Python.
 """
 
 from __future__ import annotations
@@ -34,6 +36,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aisdb_spark.plans.per_entity import apply_per_entity
 
 _INTERP_SCHEMA = "conv_id string, segment_id int, ts timestamp, value double"
 
@@ -68,20 +72,12 @@ def interp_time(df: DataFrame, step_seconds: int = 600) -> DataFrame:
     vessel, segments as index ranges (aisdb/track_gen.py:167-204).
     """
     step_us = int(step_seconds) * 1_000_000
-    empty = pd.DataFrame(
-        {
-            "conv_id": pd.Series(dtype="object"),
-            "segment_id": pd.Series(dtype="int32"),
-            "ts": pd.Series(dtype="datetime64[us]"),
-            "value": pd.Series(dtype="float64"),
-        }
-    )
 
-    def _one_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sort by (ts, turn_idx) then dedup exact-duplicate timestamps
-        # keeping the last turn — the spline/interp dedup-by-time precedent
-        # (aisdb/interp.py:275-289); sort precedent aisdb/interp.py:334-338
-        pdf = pdf.sort_values(["ts", "turn_idx"], kind="stable")
+    def _one_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        # rows arrive sorted by (ts, turn_idx): dedup exact-duplicate
+        # timestamps keeping the last turn — the spline/interp dedup-by-time
+        # precedent (aisdb/interp.py:275-289); sort precedent
+        # aisdb/interp.py:334-338
         seg_all = pdf["segment_id"].to_numpy(dtype=np.int32)
         t_all = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         v_all = pdf["value"].to_numpy(dtype=np.float64)
@@ -98,7 +94,7 @@ def interp_time(df: DataFrame, step_seconds: int = 600) -> DataFrame:
             vals.append(out)
             segs.append(np.full(len(grid), s, dtype=np.int32))
         if not grids:
-            return empty
+            return None
         return pd.DataFrame(
             {
                 "conv_id": pdf["conv_id"].iloc[0],
@@ -108,12 +104,11 @@ def interp_time(df: DataFrame, step_seconds: int = 600) -> DataFrame:
             }
         )
 
-    from aisdb_spark.plans.sharding import apply_per_conv
-
-    return apply_per_conv(
+    return apply_per_entity(
         df.select("conv_id", "segment_id", "turn_idx", "ts", "value"),
         _one_conv,
         _INTERP_SCHEMA,
+        order=["ts", "turn_idx"],
     )
 
 
@@ -127,7 +122,7 @@ def interp_time_expr(df: DataFrame, step_seconds: int = 600) -> DataFrame:
     as-of prev/next sample (the union-window as-of idiom of
     ``operators/asof.py``). Everything is JVM expression work inside
     WholeStageCodegen: at cluster scale this removes the Arrow pipe the
-    applyInPandas version pays (see PLANS.md codec decomposition for what
+    kernel version pays (see PLANS.md codec decomposition for what
     that pipe costs), and all three exchanges hash on conv_id so the plan
     reuses one exchange shape. Registry uses THIS version; the kernel
     version remains as the numpy reference implementation.
@@ -229,17 +224,13 @@ def ewma(df: DataFrame, alpha: float = 0.3) -> DataFrame:
     schema = "conv_id string, turn_idx int, ts timestamp, value long, ewma_value double"
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
         # pandas' C kernel implements exactly the adjust=True recursion
-        pdf["ewma_value"] = (
-            pdf["value"].astype("float64").ewm(alpha=alpha, adjust=True).mean()
+        return pdf.assign(
+            ewma_value=pdf["value"].astype("float64").ewm(alpha=alpha, adjust=True).mean()
         )
-        return pdf[["conv_id", "turn_idx", "ts", "value", "ewma_value"]]
 
-    from aisdb_spark.plans.sharding import apply_per_conv
-
-    return apply_per_conv(
-        df.select("conv_id", "turn_idx", "ts", "value"), _one, schema
+    return apply_per_entity(
+        df.select("conv_id", "turn_idx", "ts", "value"), _one, schema, order=["turn_idx"]
     )
 
 
@@ -294,17 +285,8 @@ def interp_cubic_spline(df: DataFrame, step_seconds: int = 600) -> DataFrame:
     grid (semantics of aisdb/interp.py:273-356: sort by time, dedup
     duplicate timestamps, skip short segments — here < 3 points)."""
     step_us = int(step_seconds) * 1_000_000
-    empty = pd.DataFrame(
-        {
-            "conv_id": pd.Series(dtype="object"),
-            "segment_id": pd.Series(dtype="int32"),
-            "ts": pd.Series(dtype="datetime64[us]"),
-            "value": pd.Series(dtype="float64"),
-        }
-    )
 
-    def _one_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "turn_idx"], kind="stable")
+    def _one_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
         seg_all = pdf["segment_id"].to_numpy(dtype=np.int32)
         t_all = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         v_all = pdf["value"].to_numpy(dtype=np.float64)
@@ -333,7 +315,7 @@ def interp_cubic_spline(df: DataFrame, step_seconds: int = 600) -> DataFrame:
             vals.append(out)
             segs.append(np.full(len(grid), s, dtype=np.int32))
         if not grids:
-            return empty
+            return None
         return pd.DataFrame(
             {
                 "conv_id": pdf["conv_id"].iloc[0],
@@ -343,10 +325,9 @@ def interp_cubic_spline(df: DataFrame, step_seconds: int = 600) -> DataFrame:
             }
         )
 
-    from aisdb_spark.plans.sharding import apply_per_conv
-
-    return apply_per_conv(
+    return apply_per_entity(
         df.select("conv_id", "segment_id", "turn_idx", "ts", "value"),
         _one_conv,
         _INTERP_SCHEMA,
+        order=["ts", "turn_idx"],
     )

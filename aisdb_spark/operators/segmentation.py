@@ -19,7 +19,7 @@ Scale: the only shuffle is the hash exchange on ``conv_id`` — identical to
 the exchange every other per-conversation operator needs, so AQE/Catalyst
 reuse it across chained stages. Hot conversations make single window
 partitions large but the state per row is O(1). Nothing chunks a
-conversation before a later applyInPandas stage; only the codec chunks
+conversation before a later per-entity Python stage; only the codec chunks
 itself (``codec.compress(max_rows=...)``, mirroring AISdb's 50k-row
 batching, ``aisdb_lib/src/decode.rs:19``).
 """

@@ -10,7 +10,8 @@ Local-mode testing runs on ``local[N]``; the same config block is what a
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real cluster
   AQE's coalesce makes the initial number mostly a ceiling.
 - Arrow enabled: every Python-side operator here is a vectorized
-  pandas/Arrow UDF (``applyInPandas`` / ``mapInArrow``) — never per-row Python.
+  Arrow UDF (``mapInArrow``, ``mapInPandas``; ``applyInPandasWithState``
+  for streaming EWMA) — never per-row Python.
 - Session timezone pinned UTC so windowed rollups and the DuckDB oracle
   (UTC-naive timestamps) agree byte-for-byte.
 """

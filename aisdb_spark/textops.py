@@ -230,27 +230,6 @@ _SHINGLE_LIST_EXPR = (
 _SHINGLE_SET_EXPR = f"array_distinct({_SHINGLE_LIST_EXPR})"
 
 
-def with_minhash(docs: DataFrame) -> DataFrame:
-    """MinHash signatures as ONE per-row projection — tokenize once, hash
-    each shingle once, 8 array_min folds over the hash list. No explode,
-    no window, no aggregation shuffle, no join back: the plan is scan →
-    project (WholeStageCodegen). Documents with <3 tokens get NULL
-    signatures (empty list → array_min NULL), exactly like the old
-    left-join shape. Bit-identical output (same md5-derived integers)."""
-    sig_cols = [
-        F.expr(
-            f"array_min(transform(_hs, h -> ({a} * h + {b}) % {MINHASH_P}))"
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    ]
-    return (
-        spread_scan(docs, "doc_id")
-        .withColumn("_hs", F.expr(_SHINGLE_HASHES_EXPR))
-        .select("*", *sig_cols)
-        .drop("_hs")
-    )
-
-
 def shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, sh: distinct shingle set) — per-row ``array_distinct`` over
     the expression shingle list (downstream uses only intersect/union

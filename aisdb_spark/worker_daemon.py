@@ -57,7 +57,9 @@ try:  # best-effort preload — absence only costs the old per-worker import
     # Kernel-bearing modules are pickled BY REFERENCE into Python stages
     # (they are importable module-level functions), so every worker
     # imports them — and through them pyspark.sql and the package graph
-    # — on first use. Import them once here instead.
+    # — on first use. Import them once here instead. codec imports the
+    # per-entity route (plans.per_entity) at module level, so every
+    # per-conversation kernel's batch loop is preloaded with it.
     import aisdb_spark.multimodal  # noqa: F401
     import aisdb_spark.operators.asof  # noqa: F401
     import aisdb_spark.operators.codec  # noqa: F401

@@ -36,3 +36,40 @@ def test_registry_fits_driver_budget():
         f"registry has {len(QUERIES)} queries; driver checks only 50 - "
         "fold variants instead of exceeding the budget"
     )
+
+
+def test_plan_cache_rebuilds_when_an_input_changes(spark, tmp_path):
+    """A cached plan keeps its file listing: replacing an input under the
+    same sf_dir must rebuild it, not answer from the old files."""
+    import shutil
+
+    from aisdb_spark import queries
+    from tests.conftest import SF_ORACLE
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMALL, sf)
+    q = QUERIES["gorilla_metrics"]
+    before = q(spark, str(sf)).count()
+    shutil.copyfile(f"{SF_ORACLE}/events.parquet", sf / "events.parquet")
+    fresh = queries.gorilla_metrics(spark, str(sf)).count()
+    assert fresh != before
+    assert q(spark, str(sf)).count() == fresh
+    again = q(spark, str(sf))
+    assert q(spark, str(sf)) is again  # unchanged inputs reuse the plan
+
+
+def test_plan_cache_is_bounded(spark, tmp_path):
+    """The least recently used plans go first once the cache is full."""
+    from aisdb_spark import queries
+
+    dirs = [tmp_path / str(i) for i in range(queries._PLAN_CACHE_MAX + 5)]
+    try:
+        for d in dirs:
+            d.mkdir()
+            queries._cached_plan(spark, str(d), "probe", lambda s, sf_dir: sf_dir)
+        assert len(queries._PLAN_CACHE) == queries._PLAN_CACHE_MAX
+        kept = {k[1] for k in queries._PLAN_CACHE if k[2] == "probe"}
+        assert kept == {str(d) for d in dirs[5:]}
+    finally:
+        for k in [k for k in queries._PLAN_CACHE if k[2] == "probe"]:
+            del queries._PLAN_CACHE[k]
