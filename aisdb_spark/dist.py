@@ -1,10 +1,8 @@
 """Packaging for multi-executor submission.
 
 Builds the ``--py-files`` zip of the ``aisdb_spark`` package — the artifact
-a cluster run ships with ``spark-submit --py-files aisdb_spark.zip job.py``.
-Locally, multi-JVM masters (``local-cluster[...]``) need it too: executor
-python workers don't inherit the driver's cwd, so the scaling benchmark
-registers this zip via ``sc.addPyFile``.
+a cluster run ships with ``spark-submit --py-files aisdb_spark.zip job.py``
+(executor python workers don't inherit the driver's cwd).
 """
 
 from __future__ import annotations

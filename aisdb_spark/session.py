@@ -48,20 +48,15 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
     """Create (or fetch) the tuned SparkSession.
 
-    ``cpus`` controls local parallelism (the N in ``local[N]``). ``master``
-    overrides the URL entirely — the scaling benchmark passes
-    ``local-cluster[n,8,mem]`` to get genuinely separate executor JVMs
-    (own heap, shuffle manager, python workers), the closest local stand-in
-    for N vs 4N executors.
+    ``cpus`` controls local parallelism (the N in ``local[N]``).
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -74,10 +69,7 @@ def get_spark(
         # is already worse again from task overhead). Inert at scale: the
         # knob only affects shuffles small enough to coalesce below 1 MB —
         # 100 MB-1 GB partitions (guide §2.2) never touch this floor.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_COALESCE", "256k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -98,8 +90,6 @@ def get_spark(
             "spark.local.dir",
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
         )
-    )
-    if os.environ.get("SPARK_GRAFT_PRELOAD", "1") != "0":
         # The worker daemon (aisdb_spark/worker_daemon.py) imports the
         # kernel stack once before it forks, then removes both per-task
         # costs of the stock daemon: the zip/jar importers whose archives
@@ -107,9 +97,8 @@ def get_spark(
         # post-task gc.collect() over the preloaded heap (gc.freeze()).
         # Measured at 4 cores: worker CPU per gorilla_metrics execution
         # 1.9-2.1 → 0.08-0.11 CPU-s.
-        builder = builder.config(
-            "spark.python.daemon.module", "aisdb_spark.worker_daemon"
-        )
+        .config("spark.python.daemon.module", "aisdb_spark.worker_daemon")
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

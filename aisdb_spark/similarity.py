@@ -169,8 +169,8 @@ def neardup_r_for(n_docs: int, target_bucket: int = 32, r_min: int = NEARDUP_R) 
     reliably: a pair at cosine ≥ 0.99 (θ ≤ 8°) matches one r=20 band
     with p = (1-θ/π)^20 ≈ 0.40, and ≥0.999 with p ≈ 0.85 — across b=4
     bands that is ≥0.87 / ≥0.999 recall, the dedup regime this operator
-    serves. Measured at 10⁶ docs in bench_similarity_large.py
-    (predicted vs observed occupancy in BENCH_LARGE.json)."""
+    serves. Measured at 10⁶ docs: predicted vs observed occupancy in
+    BENCH_LARGE.json."""
     import math
 
     return max(r_min, math.ceil(math.log2(max(1, n_docs) / target_bucket)))
@@ -189,8 +189,7 @@ def cosine_band_rows(
     emb: DataFrame, planes: np.ndarray, r: int, b: int
 ) -> DataFrame:
     """(vec_id, band, bkey) hyperplane sign-pattern band rows over an
-    embeddings frame — shared by cosine_near_pairs and the large-corpus
-    occupancy measurement (bench_similarity_large.py).
+    embeddings frame for cosine_near_pairs.
 
     One explode pass over an array of (band, bkey) structs instead of the
     old b-way unionByName: the union re-evaluated the embeddings scan and

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import StructType, TimestampNTZType
 
 _RUNTIME_CONF = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
@@ -77,3 +77,22 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """The one parquet entry point: normalize session, read, guard schema."""
     normalize_session(spark)
     return ensure_ltz(spark.read.parquet(path))
+
+
+def read_parquet_stream(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    glob: str | None = None,
+    recursive: bool = False,
+) -> DataFrame:
+    """The streaming twin of :func:`read_parquet`: a file stream over
+    ``path`` with a fixed ``schema``. ``glob`` filters file names;
+    ``recursive`` also lists subdirectories (waves landed one per dir)."""
+    normalize_session(spark)
+    reader = spark.readStream.schema(schema)
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    return ensure_ltz(reader.parquet(path))

@@ -117,12 +117,8 @@ def gated_write(writer):
     protocol decides — the ``txn.swap_commit`` journal and the
     ``checkpoint.write_tier`` manifest — so those are the only callers; an
     ungated write (CSV staging) keeps the session's v1 default.
-    ``$SPARK_GRAFT_COMMITTER_V`` overrides the version (object-store
-    deployments use their own committer)."""
-    return writer.option(
-        "mapreduce.fileoutputcommitter.algorithm.version",
-        os.environ.get("SPARK_GRAFT_COMMITTER_V", "2"),
-    )
+    (Object-store deployments use their own committer.)"""
+    return writer.option("mapreduce.fileoutputcommitter.algorithm.version", "2")
 
 
 def read_side_json(spark: SparkSession, tier_dir: str, name: str):

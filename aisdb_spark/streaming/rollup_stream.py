@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aisdb_spark.sources.normalize import ensure_ltz, normalize_session
+from aisdb_spark.sources.normalize import read_parquet_stream
 from aisdb_spark.streaming import fsio, txn
 
 # ts is declared NTZ (raw parquet micros, no session-tz reinterpretation) and
@@ -52,8 +52,8 @@ EVENTS_SCHEMA = T.StructType(
 
 
 def rollup_measures(events: DataFrame) -> DataFrame:
-    """The shared aggregation — applied identically to a stream or a batch
-    DataFrame, which is what makes the stream==batch test meaningful."""
+    """The one-shot 1-minute aggregation: the reference answer that the
+    drained stream (:func:`drained_rollup_1min`) is tested equal to."""
     order = F.struct(F.col("ts"), F.col("event_id"))
     return (
         # floor, not round: Spark rounds HALF_UP, DuckDB half-even — floor is
@@ -226,13 +226,9 @@ def drained_rollup_1min(
     touched-partition merge only, needs no watermark to be lossless for
     arbitrarily late rows, and per-batch cost ∝ updated keys + touched
     partitions (measured, same file)."""
-    normalize_session(spark)
+    src = read_parquet_stream(spark, landing, EVENTS_SCHEMA, glob)
     base = out_base or fsio.scratch_dir("spark_stream_rollup_")
     tier, ck = f"{base}/tier", f"{base}/ck"
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    src = ensure_ltz(reader.parquet(landing))
     q = (
         src.writeStream.foreachBatch(
             lambda b, e: upsert_rollup_partials_batch(spark, b, tier, epoch_id=e)
@@ -259,13 +255,10 @@ def stream_user_sessions(
     State is merged per (user, window) by the SessionWindowStateStore —
     the Spark-native upgrade of the reference receiver's per-entity flush
     buffers (aisdb/receiver.py:6-57)."""
-    normalize_session(spark)
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    src = ensure_ltz(reader.parquet(landing_dir)).withWatermark("ts", watermark)
+    src = read_parquet_stream(spark, landing_dir, EVENTS_SCHEMA, glob)
     return (
-        src.withColumn("cents", F.expr("CAST(floor(value * 100) AS BIGINT)"))
+        src.withWatermark("ts", watermark)
+        .withColumn("cents", F.expr("CAST(floor(value * 100) AS BIGINT)"))
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -484,13 +477,9 @@ def drained_user_sessions(
     not driver memory; the native session_window operator remains
     :func:`stream_user_sessions` for continuous pipelines, append-mode
     pytest-covered."""
-    normalize_session(spark)
+    src = read_parquet_stream(spark, landing, EVENTS_SCHEMA, glob)
     base = out_base or fsio.scratch_dir("spark_stream_sess_")
     tier, ck = f"{base}/tier", f"{base}/ck"
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    src = ensure_ltz(reader.parquet(landing))
     q = (
         src.writeStream.foreachBatch(
             lambda b, e: upsert_sessions_batch(

@@ -89,17 +89,11 @@ def stream_ewma(
     """readStream(landing dir of raw-turn parquet) → stateful per-conv
     EWMA (append mode, state never times out — conversations are
     unbounded, exactly like the reference's per-mmsi buffers)."""
-    from aisdb_spark.sources.normalize import ensure_ltz, normalize_session
+    from aisdb_spark.sources.normalize import read_parquet_stream
 
-    normalize_session(spark)
-    reader = spark.readStream.schema(schema).option(
-        "recursiveFileLookup", "true"
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    src = ensure_ltz(reader.parquet(landing_dir)).select(
-        "conv_id", "turn_idx", "ts", "value"
-    )
+    src = read_parquet_stream(
+        spark, landing_dir, schema, glob, recursive=True
+    ).select("conv_id", "turn_idx", "ts", "value")
     return src.groupBy("conv_id").applyInPandasWithState(
         _ewma_state_fn(alpha),
         OUT_SCHEMA,

@@ -160,15 +160,10 @@ def stream_upsert_1min(
     micro-batch (crash between tier write and checkpoint commit) is
     skipped by the epoch guard, and a write cut short is rolled back by
     the journaled swap, so a killed run re-converges to the same rows."""
-    from aisdb_spark.sources.normalize import ensure_ltz, normalize_session
+    from aisdb_spark.sources.normalize import read_parquet_stream
 
-    normalize_session(spark)
-    reader = spark.readStream.schema(schema).option(
-        "recursiveFileLookup", "true"  # waves land in subdirectories
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    src = ensure_ltz(reader.parquet(landing_dir))
+    # waves land in subdirectories
+    src = read_parquet_stream(spark, landing_dir, schema, glob, recursive=True)
     q = (
         src.writeStream.foreachBatch(
             lambda batch, epoch: upsert_batch(spark, batch, tier_dir, epoch_id=epoch)

@@ -269,9 +269,8 @@ def minhash_band_rows(docs: DataFrame) -> DataFrame:
     see PLANS.md). Empty-shingle docs (<3 tokens) emit a NULL band array —
     ``explode`` drops them, the exact contract of the old ``mh0 IS NOT
     NULL`` filter without giving the optimizer a predicate to push below
-    the spread exchange (see _sigs_with_hs). Shared by
-    lsh_candidate_pairs and the large-corpus occupancy measurement
-    (bench_similarity_large.py)."""
+    the spread exchange (see _sigs_with_hs). Used by
+    lsh_candidate_pairs."""
     mh = _sigs_with_hs(docs)
     key_structs = F.array(
         *[
@@ -394,8 +393,7 @@ def simhash_band_rows(docs: DataFrame) -> DataFrame:
     plan) — measured 7.2 s → see PLANS.md. Null-text docs emit a NULL band
     array — ``explode`` drops them (the old inner-join contract) without a
     pushable ``IS NOT NULL`` predicate (see _sigs_with_hs for why that
-    matters). Shared by simhash_near_pairs and the large-corpus occupancy
-    measurement."""
+    matters). Used by simhash_near_pairs."""
     sh = _simhash_sigs(docs)
     key_structs = F.array(
         *[
@@ -446,8 +444,7 @@ def ngram_band_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, band, bkey): each of the 8 minhash values as its own band
     (8 bands x 1 row) in a single explode pass (not an 8-way union) — one
     signature subtree, one exchange reused by both self-join sides (see
-    PLANS.md). Shared by ngram_jaccard_pairs and the large-corpus
-    occupancy measurement."""
+    PLANS.md). Used by ngram_jaccard_pairs."""
     mh = _sigs_with_hs(docs)
     key_structs = F.array(
         *[

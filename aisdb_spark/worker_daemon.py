@@ -34,10 +34,9 @@ still works (it only pays the re-read again), and ``--py-files``
 archives are re-added to ``sys.path`` by ``setup_spark_files`` on every
 task.
 
-Wired via ``spark.python.daemon.module`` in session.get_spark (opt-out:
-``SPARK_GRAFT_PRELOAD=0`` gives the stock daemon). The imports are
-best-effort: a worker environment without pandas still forks a
-functional daemon and pays the per-worker import exactly as before.
+Wired via ``spark.python.daemon.module`` in session.get_spark. The
+imports are best-effort: a worker environment without pandas still forks
+a functional daemon and pays the per-worker import exactly as before.
 Cluster note: this module ships with the package (``--py-files``), so
 the same setup applies per executor.
 """

@@ -7,22 +7,10 @@ through the full raw→1min→1h→1d materialized cascade) plus sec/tier.
 Each headline query is executed to completion with a noop sink (full
 pipeline cost, no driver collect skew).
 
-Scaling-efficiency evidence (N vs 4N) is produced by bench_scaling.py,
-which runs this file at local[8] and local[32] on identical input and
-writes BENCH/BASELINE.md.
-
-Round 5: the output self-documents box state. BENCH_r04 was taken during
-a sustained box storm (untouched queries slowed a uniform ~24%), which
-was only diagnosable after the fact by cross-referencing the scaling
-ledger's probes. Now the same short-form hardware probes the calm-window
-ledger uses (bench_scaling_calm.pre_probe: STREAM-triad bus + pipe IPC
-ceilings at N vs 4N process counts) run before and after the suite and
-ride in the JSON as `pre_probe` / `post_probe` / `calm` — a stormy
-measurement is flagged the moment it is recorded, not a round later.
-Disable with SPARK_GRAFT_BENCH_PROBES=0 (e.g. inside bench_scaling.py
-whose levels probe already). `query_variants` annotates the queries that
-carry multiple folded registry variants (round-4 fold), so a future
-reader doesn't misread content growth as regression.
+`query_variants` annotates the queries that carry multiple folded registry
+variants (round-4 fold), so a future reader doesn't misread content growth
+as regression. Per-layer timings and the host's steal and busy CPU come
+from perfbench (perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -83,16 +71,6 @@ QUERY_VARIANTS = {
     "streaming_user_sessions": "adaptive-horizon bookkeeping since r4",
 }
 
-PROBES = os.environ.get("SPARK_GRAFT_BENCH_PROBES", "1") != "0"
-
-
-def _probe():
-    if not PROBES:
-        return None
-    import bench_scaling_calm as bc
-
-    return bc.pre_probe()
-
 
 def main() -> None:
     from aisdb_spark import checkpoint
@@ -100,7 +78,6 @@ def main() -> None:
     from aisdb_spark.session import get_spark
     from aisdb_spark.sources.transcripts import load_transcripts, with_value
 
-    pre = _probe()  # before the JVM exists — clean box reading
     spark = get_spark("bench", cpus=CPUS)
     tv = with_value(load_transcripts(spark, SF_DIR))
     n_turns = tv.count()  # also warms the events scan
@@ -148,30 +125,8 @@ def main() -> None:
         "cascade_sec": round(cascade_sec, 3),
         "turns_per_sec": round(n_turns / cascade_sec, 1),
         "cpus": CPUS,
+        "query_variants": QUERY_VARIANTS,
     }
-    if PROBES:
-        # stop the JVM first: the post-probe must read the box, not the
-        # suite's own executor teardown
-        spark.stop()
-        post = _probe()
-        import subprocess
-
-        import bench_scaling_calm as bc
-
-        post_ok = bc.calm(post)
-        if not post_ok:
-            # v2-amendment logic (bench_scaling_calm module docstring): a
-            # failing probe in the seconds after the JVM exits usually
-            # reads the suite's own teardown writeback, not a storm —
-            # sync, settle, re-probe; both readings are recorded
-            subprocess.run(["sync"], check=False)
-            time.sleep(bc.SETTLE_S)
-            out["post_settled_probe"] = _probe()
-            post_ok = bc.calm(out["post_settled_probe"])
-        out["pre_probe"], out["post_probe"] = pre, post
-        out["calm"] = bool(bc.calm(pre) and post_ok)
-        out["calm_thresholds"] = {"bus_min": bc.BUS_MIN, "ipc_min": bc.IPC_MIN}
-        out["query_variants"] = QUERY_VARIANTS
     print(json.dumps(out))
 
 

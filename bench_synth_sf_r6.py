@@ -8,7 +8,7 @@ modified; output goes to a fresh directory (tmpfs by default).
 
 Replication rules (REPS copies of every fact table):
 - events: user_id / event_id offset per replica (key space grows with
-  data, same principle as bench_scaling.build_corpus);
+  data);
 - documents: doc_id offset; text gets a per-replica token appended so
   replicas are near- (not exact-) duplicates, and n_chars is recomputed
   so that n_chars == utf8_length(text) holds as in the source;

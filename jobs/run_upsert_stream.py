@@ -42,10 +42,9 @@ def main() -> None:
     spark = SparkSession.builder.appName("transcript-upsert-stream").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from aisdb_spark.sources.normalize import ensure_ltz, normalize_session
+    from aisdb_spark.sources.normalize import read_parquet_stream
     from aisdb_spark.streaming import upsert as ups
 
-    normalize_session(spark)
     schema = T.StructType(
         [
             T.StructField("conv_id", T.StringType()),
@@ -57,10 +56,9 @@ def main() -> None:
     tier_1min = os.path.join(args.tiers, "1min")
     coarser = {t: os.path.join(args.tiers, t) for t in ("1h", "1d")}
 
-    reader = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
-    if args.glob:
-        reader = reader.option("pathGlobFilter", args.glob)
-    src = ensure_ltz(reader.parquet(args.landing))
+    src = read_parquet_stream(
+        spark, args.landing, schema, args.glob, recursive=True
+    )
 
     n_batches = {"n": 0, "days": 0}
 

@@ -55,14 +55,14 @@ def test_all_operators_on_empty(spark):
 
 
 def test_round2_modules_on_empty(spark, tmp_path):
-    """Upsert, maintenance, expression interp, receiver parse — empty in,
-    empty (or no-op) out, never raise."""
+    """Upsert, maintenance, expression interp — empty in, empty (or no-op)
+    out, never raise."""
     import datetime as dt
 
     from aisdb_spark import maintenance
     from aisdb_spark.operators import interp as interp_mod
     from aisdb_spark.operators import segmentation
-    from aisdb_spark.streaming import receiver, upsert as ups
+    from aisdb_spark.streaming import upsert as ups
 
     tv = _empty(spark).withColumn("turn_idx", F.col("turn_idx").cast("int"))
     # expression interp on empty
@@ -88,8 +88,3 @@ def test_round2_modules_on_empty(spark, tmp_path):
     assert maintenance.compact_tier(spark, str(tmp_path / "nope"))[
         "compacted"
     ] == 0
-    # receiver: malformed / empty lines parse to zero rows, not an error
-    lines = spark.createDataFrame(
-        [("",), ("not json",), ("{}",), ('{"event_id": null}',)], ["value"]
-    )
-    assert receiver.parse_event_lines(lines).count() == 0

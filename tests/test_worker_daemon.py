@@ -4,19 +4,12 @@ would re-read, and the preloaded heap frozen out of the post-task GC."""
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pyarrow as pa
-import pytest
 
 SCHEMA = "zipimporters long, frozen long"
 
 
-@pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_PRELOAD") == "0",
-    reason="the stock pyspark daemon is selected",
-)
 def test_warm_worker_has_no_zipimporter_and_frozen_heap(spark):
     assert spark.conf.get("spark.python.daemon.module") == (
         "aisdb_spark.worker_daemon"
