@@ -14,20 +14,23 @@ sharing one id) into distinct labeled pathways.
 Graft domain: positions → value series; distance → |Δvalue|; speed →
 |Δvalue|/Δt_seconds.
 
-Spark shape: inherently sequential per entity ⇒ one kernel call per whole
-conversation on the per-entity route (``plans.per_entity``), with an
-O(segments × pathways) numpy loop — per-conversation state is tiny (one
-boundary point per pathway).
+Spark shape: inherently sequential per entity ⇒ on the per-entity route
+(``plans.per_entity``) the batch kernel loops over the whole conversations
+of each Arrow batch, an O(segments × pathways) numpy loop per
+conversation — per-conversation state is tiny (one boundary point per
+pathway).
 No oracle (imperative greedy state machine); golden unit tests instead.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from aisdb_spark.plans.per_entity import apply_per_entity
+from aisdb_spark.plans import per_entity
 
 _OUT_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, value long, pathway_id int"
@@ -86,12 +89,22 @@ def encode_pathways(
     minscore: float = 1e-5,
 ) -> DataFrame:
     """Append ``pathway_id`` per row (requires ts + value)."""
-
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-        v = pdf["value"].to_numpy()
-        return pdf.assign(pathway_id=_encode_conv(t, v, max_jump, max_rate, minscore))
-
-    return apply_per_entity(
-        df.select("conv_id", "turn_idx", "ts", "value"), _one, _OUT_SCHEMA, order=["turn_idx"]
+    return per_entity.apply_per_entity(
+        df.select("conv_id", "turn_idx", "ts", "value"),
+        partial(_encode_kernel, max_jump=max_jump, max_rate=max_rate, minscore=minscore),
+        _OUT_SCHEMA,
+        order=["turn_idx"],
     )
+
+
+def _encode_kernel(
+    rb: pa.RecordBatch, starts: np.ndarray, max_jump: float, max_rate: float, minscore: float
+) -> dict:
+    """Batch kernel: :func:`_encode_conv` over each conversation's slice."""
+    t = per_entity.micros(rb.column("ts"))
+    v = rb.column("value").to_numpy(zero_copy_only=False)
+    ends = np.append(starts[1:], len(t))
+    pid = [
+        _encode_conv(t[a:b], v[a:b], max_jump, max_rate, minscore) for a, b in zip(starts, ends)
+    ]
+    return {**per_entity.columns(rb), "pathway_id": np.concatenate(pid)}

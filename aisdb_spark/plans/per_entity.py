@@ -11,11 +11,14 @@ the mmsi changes. The same shape here:
   ``mapInArrow`` stage cuts them at key changes. The last entity of a
   batch may go on in the next one, so it is held over: a task holds one
   batch plus the open entity, however many entities it sees;
-- :func:`apply_per_entity`: runs a pandas kernel once per whole entity
-  and returns one Arrow batch per cut batch.
+- :func:`apply_per_entity`: runs a batch kernel once per cut batch, on
+  all its whole entities at once, and returns one Arrow batch per cut
+  batch.
 
 The Python boundary is paid once per Arrow batch, not once per group, and
-no task holds more than one entity beyond its batch (the grouped-map route
+kernels vectorize across the entities of a batch (the rule of
+*Accelerating Python UDFs in Vectorized Query Execution*, CIDR 2022). No
+task holds more than one entity beyond its batch (the grouped-map route
 held a whole hash shard, hot keys included, as one pandas frame).
 """
 
@@ -25,7 +28,6 @@ from collections.abc import Callable
 from functools import partial
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -39,7 +41,10 @@ def sorted_by(df: DataFrame, key: str, order: list[str], cols: list[str]) -> Dat
     spark = df.sparkSession
     # explicit count: AQE coalesces a bare repartition(key) to JVM-sized
     # (~1 MB) partitions, which at small inputs runs the whole Python stage
-    # on one worker
+    # on one worker. The count holds only where this repartition is kept:
+    # on an input already hash-partitioned on ``key`` (a window over
+    # ``key``, as after gap_split) the planner drops it, and AQE coalesces
+    # the window's exchange instead
     n = max(
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
         spark.sparkContext.defaultParallelism,
@@ -87,33 +92,44 @@ def chunks(it, max_rows: int | None = None):
         yield held, np.zeros(1, np.int64), np.array([done // m])
 
 
+def columns(rb: pa.RecordBatch, keep: np.ndarray | None = None) -> dict:
+    """The columns of ``rb`` by name; only the rows of mask ``keep`` if given."""
+    if keep is not None:
+        rb = rb.filter(pa.array(keep))
+    return dict(zip(rb.schema.names, rb.columns))
+
+
+def micros(col: pa.Array) -> np.ndarray:
+    """A timestamp column as int64 µs since the epoch."""
+    return col.cast(pa.int64()).to_numpy(zero_copy_only=False)
+
+
 def _apply_batches(it, kernel: Callable, schema: pa.Schema):
     """One ``schema`` batch per cut batch of ``it`` that has output:
-    ``kernel`` runs once per whole entity, on its rows as a pandas frame,
-    and may return None for an entity without output."""
+    ``kernel(batch, starts)`` runs once per cut batch, whose whole entities
+    start at rows ``starts``, and returns its output columns by name, or
+    None for no output."""
     for rb, starts, _ in chunks(it):
-        pdf = rb.to_pandas()
-        ends = np.append(starts[1:], len(pdf))
-        outs = [kernel(pdf.iloc[a:b]) for a, b in zip(starts, ends)]
-        outs = [o for o in outs if o is not None]
-        if outs:
-            yield pa.RecordBatch.from_pandas(
-                pd.concat(outs, ignore_index=True), schema=schema, preserve_index=False
-            )
+        cols = kernel(rb, starts)
+        if cols is not None:
+            out = pa.RecordBatch.from_pydict(cols, schema=schema)
+            if out.num_rows:
+                yield out
 
 
 def apply_per_entity(
     df: DataFrame,
-    kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+    kernel: Callable[[pa.RecordBatch, np.ndarray], dict | None],
     schema: str,
     order: list[str],
 ) -> DataFrame:
-    """Run ``kernel`` once per conversation of ``df`` on all its rows,
-    sorted by ``order``, as one pandas frame. ``schema`` is the DDL of the
-    kernel's output frames."""
+    """Run ``kernel(batch, starts)`` over the conversations of ``df``, sorted
+    by ``order``: ``batch`` holds whole conversations (conv_id first), the
+    i-th starting at row ``starts[i]``. The kernel returns a dict of output
+    columns (numpy or Arrow arrays) or None; ``schema`` is their DDL."""
     out = _parse_datatype_string(schema)
-    # Spark takes µs timestamps only: convert the kernels' frames against
-    # the Spark schema's Arrow twin, not pandas' default (ns) types
+    # Spark takes µs timestamps only: build the batches against the Spark
+    # schema's Arrow twin (int64 µs columns cast to its timestamps)
     fn = partial(_apply_batches, kernel=kernel, schema=to_arrow_schema(out))
     cols = [c for c in df.columns if c != "conv_id"]
     return sorted_by(df, "conv_id", order, cols).mapInArrow(fn, out)

@@ -1,7 +1,7 @@
 """The per-entity route (plans/per_entity.py): the carry loop hands every
-kernel each whole conversation exactly once, in order, whatever the Arrow
-batch cuts — checked without a JVM over random batch cuts, and through
-Spark at 37-row Arrow batches against the DuckDB oracles."""
+conversation whole to exactly one batch kernel call, in order, whatever
+the Arrow batch cuts — checked without a JVM over random batch cuts, and
+through Spark at 37-row Arrow batches against the DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import pytest
 from aisdb_spark.plans import per_entity
 
 SIZES = [1, 2, 3, 7, 40, 41, 90, 5, 1, 64, 9, 2]
-NONE_CONVS = {"c01", "c02", "c06", "c11"}  # kernel output None
+NONE_CONVS = {"c01", "c02", "c06", "c11"}  # no output rows
 
 
 def _sorted_table() -> pa.Table:
@@ -31,12 +31,26 @@ def _sorted_table() -> pa.Table:
     )
 
 
-def _kernel(seen: list):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        seen.append((pdf["conv_id"].iloc[0], pdf["turn_idx"].tolist()))
-        if pdf["conv_id"].iloc[0] in NONE_CONVS:
+def _kernel(seen: list, calls: list):
+    """A batch kernel that records each call's conversations and returns
+    the per-conversation running sum of ``value``, minus NONE_CONVS: None
+    when a call keeps no row and its first conversation is odd-numbered,
+    else the (maybe empty) columns."""
+
+    def kernel(rb: pa.RecordBatch, starts: np.ndarray) -> dict | None:
+        conv = rb.column("conv_id").to_numpy(zero_copy_only=False)
+        turn = rb.column("turn_idx").to_pylist()
+        ends = np.append(starts[1:], rb.num_rows)
+        calls.append([conv[a] for a in starts])
+        for a, b in zip(starts, ends):
+            assert (conv[a:b] == conv[a]).all()
+            seen.append((conv[a], turn[a:b]))
+        v = rb.column("value").to_numpy()
+        csum = np.concatenate([np.cumsum(v[a:b]) for a, b in zip(starts, ends)])
+        keep = ~np.isin(conv, list(NONE_CONVS))
+        if not keep.any() and int(conv[0][1:]) % 2:
             return None
-        return pdf.assign(csum=pdf["value"].cumsum())
+        return {**per_entity.columns(rb, keep), "csum": csum[keep]}
 
     return kernel
 
@@ -61,8 +75,9 @@ def _cuts(rng, n: int) -> list[int]:
 
 def test_apply_batches_whole_conversations_once():
     """Random 1-40-row batch cuts, plus one cut per conversation (so some
-    cut batches hold only None conversations): every conversation reaches
-    the kernel exactly once, whole and in turn order, and the output
+    cut batches hold only NONE_CONVS): every conversation reaches exactly
+    one kernel call, whole and in turn order, the calls see them in order,
+    a call whose output is None or empty yields nothing, and the output
     equals a pandas groupby reference."""
     table = _sorted_table()
     pdf = table.to_pandas()
@@ -74,6 +89,7 @@ def test_apply_batches_whole_conversations_once():
         ],
         ignore_index=True,
     )
+    whole = [(f"c{i:02d}", list(range(m))) for i, m in enumerate(SIZES)]
     rng = np.random.default_rng(3)
     per_conv = np.cumsum([0, *SIZES]).tolist()
     for bounds in [*(_cuts(rng, table.num_rows) for _ in range(8)), per_conv]:
@@ -81,11 +97,18 @@ def test_apply_batches_whole_conversations_once():
             table.slice(a, b - a).to_batches()[0] for a, b in zip(bounds[:-1], bounds[1:])
         ]
         seen: list = []
-        outs = list(per_entity._apply_batches(iter(batches), _kernel(seen), OUT))
-        assert seen == [(f"c{i:02d}", list(range(m))) for i, m in enumerate(SIZES)]
+        calls: list = []
+        outs = list(per_entity._apply_batches(iter(batches), _kernel(seen, calls), OUT))
+        assert seen == whole
+        assert sum(calls, []) == [c for c, _ in whole]
+        assert all(o.num_rows for o in outs)
+        assert len(outs) == sum(not set(c) <= NONE_CONVS for c in calls)
         got = pa.Table.from_batches(outs, OUT).to_pandas()
         pd.testing.assert_frame_equal(got, ref, check_dtype=False)
-    assert len(outs) < len(SIZES)  # one-conversation cuts of None rows yield nothing
+    # one-conversation cuts: c01, c02, c06 and c11 each get a call of their
+    # own, c01 and c11 return None, c02 and c06 empty columns
+    assert [c for c in calls if set(c) <= NONE_CONVS] == [["c01"], ["c02"], ["c06"], ["c11"]]
+    assert len(outs) == len(SIZES) - len(NONE_CONVS)
 
 
 # ---------------------------------------------------------------------------
