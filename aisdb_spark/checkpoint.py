@@ -13,26 +13,29 @@ double-counting). With an Iceberg catalog on the cluster, the manifest
 becomes the snapshot id and the overwrite becomes
 ``overwritePartitions()`` — same contract, catalog-managed.
 
-Metrics: per tier the manifest records rows, bytes, files, and wall seconds
+Metrics: per tier the manifest records rows, parquet bytes and wall seconds
 — the lineage + throughput surface the north rule requires (decode-rate
 precedent: ``aisdb_lib/src/decode.rs:228-257``).
 
-Round 5: tier base dirs may be URI-addressed (file://, hdfs://, s3a://) —
-manifest IO and the bytes walk ride the Hadoop FileSystem client via
-``streaming.fsio`` (single recursive listFiles stream, no per-directory
-RPCs); plain local paths keep the ``os`` fast path.
+Tier base dirs may be plain paths or URIs (file://, hdfs://, s3a://):
+manifest IO and the bytes walk go through ``streaming.fsio`` with
+``fsio.session_for(path)`` (on URIs one recursive listFiles stream, no
+per-directory RPCs), so both kinds take the same code path. The tier
+file count follows ``txn.files_per_date``, the rule the streaming
+upserts use. The write stays a static overwrite, not the journaled swap:
+Spark's overwrite deletes the tier directory, manifest included, so a
+crashed build leaves no manifest and the rerun rebuilds the tier.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aisdb_spark.operators import rollup
+from aisdb_spark.streaming import fsio, txn
 
 MANIFEST = "_tier_manifest.json"
 
@@ -69,100 +72,46 @@ def _fingerprint_days(fingerprint: dict) -> int:
         return 1
 
 
-def _read_manifest(tier_dir: str) -> dict | None:
-    from aisdb_spark.streaming import fsio
-
-    spark = fsio.session_for(tier_dir)
-    if spark is not None:
-        return fsio.read_side_json(spark, tier_dir, MANIFEST)
-    try:
-        with open(os.path.join(tier_dir, MANIFEST)) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-
-
-def write_tier(
-    df: DataFrame,
-    tier_dir: str,
-    fingerprint: dict,
-    partition_by_day: bool = True,
-    files_per_date: int = 1,
-) -> dict:
+def write_tier(df: DataFrame, tier_dir: str, fingerprint: dict) -> dict:
     """Materialize one tier: day-partitioned zstd parquet + manifest.
 
     Day partitioning mirrors the reference's monthly-table / 7-day-chunk
     range layout (``aisdb/database/sqlfcn_callbacks.py:17-20``) — time-range
     queries on the tier prune whole directories.
 
-    Output is re-clustered on (bucket_date, hash(conv_id) % files_per_date)
-    before the partitioned write: without this, every shuffle partition
-    writes a sliver into every date directory — file count (and write+read
-    cost) grows ∝ parallelism × dates, which inverted the N→4N scaling run
-    (24.8 s vs 14.5 s at sf0.1×20). With it, file count is dates ×
-    files_per_date regardless of parallelism — the Iceberg
-    ``bucket(conv_id)`` layout expressed in plain parquet.
+    Output is re-clustered on (bucket_date, hash(conv_id) % k) before the
+    partitioned write: without this, every shuffle partition writes a
+    sliver into every date directory — file count (and write+read cost)
+    grows ∝ parallelism × dates, which inverted the N→4N scaling run
+    (24.8 s vs 14.5 s at sf0.1×20). With it, file count is dates × k — the
+    Iceberg ``bucket(conv_id)`` layout expressed in plain parquet. k is
+    ``txn.files_per_date`` of the fingerprint's row count (an upper bound
+    on the tier's rows) over its day span, with no pre-existing bytes.
     """
-    from pyspark.sql import Observation
-
     t0 = time.monotonic()
+    spark = df.sparkSession
     # row count observed ON the write job itself — replaces the read-back
     # count() that cost one extra job (and one full tier scan) per tier
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    if partition_by_day:
-        # Pin the partition count: an un-numbered repartition lets AQE
-        # coalesce the write to a few ~64MB tasks, serializing the write
-        # stage identically at every parallelism level (measured: 25s at
-        # both local[8] and local[32]). k (files per date) is SIZE-derived
-        # (guide §6 output file sizing): one file per ~1M tier rows per
-        # date, floored at ``files_per_date``. Small tiers write
-        # dates×1 files (commit cost ∝ file count — a 10k-row tier wrote
-        # 2.5x faster at k=1 than at the old parallelism-derived k=3 on
-        # this box's /tmp); big tiers grow k with the data, which also
-        # yields ≥cores write tasks exactly when there is enough data for
-        # parallelism to matter. File count stays parallelism-INDEPENDENT
-        # either way (the round-5 N→4N requirement). The input row count
-        # from the fingerprint upper-bounds the tier's rows.
-        n_dates = _fingerprint_days(fingerprint)
-        rows_bound = int(fingerprint.get("rows", 0) or 0)
-        # desired write tasks from data size (~250k rows/task, capped at
-        # 2×cores) — keeps big tiers parallel without inflating small
-        # tiers' file count (same three-term rule as txn.merge_into_tier)
-        desired_tasks = min(
-            -(-rows_bound // 250_000),
-            2 * df.sparkSession.sparkContext.defaultParallelism,
-        )
-        k = max(
-            files_per_date,
-            -(-desired_tasks // max(n_dates, 1)),
-            -(-rows_bound // (1_000_000 * max(n_dates, 1))),
-        )
-        writer = (
-            df.withColumn("bucket_date", F.to_date("bucket_start"))
-            .repartition(
-                max(n_dates, 1) * k,
-                F.col("bucket_date"),
-                F.pmod(F.hash("conv_id"), F.lit(k)),
-            )
-        )
-        w = writer.write.mode("overwrite").partitionBy("bucket_date")
-    else:
-        w = df.write.mode("overwrite")
-    from aisdb_spark.streaming import fsio
-
-    fsio.gated_write(w).parquet(tier_dir)
-    elapsed = time.monotonic() - t0
-    spark = df.sparkSession
-    out_rows = obs.get["rows"]
-
-    nbytes = sum(
-        sz for p, sz in fsio.walk_files(spark, tier_dir) if p.endswith(".parquet")
+    n_dates = _fingerprint_days(fingerprint)
+    k = txn.files_per_date(spark, int(fingerprint.get("rows", 0) or 0), n_dates, old_bytes=0)
+    # Pin the partition count: an un-numbered repartition lets AQE coalesce
+    # the write to a few ~64MB tasks, serializing the write stage
+    # identically at every parallelism level (measured: 25s at both
+    # local[8] and local[32]).
+    out = (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .withColumn("bucket_date", F.to_date("bucket_start"))
+        .repartition(n_dates * k, F.col("bucket_date"), F.pmod(F.hash("conv_id"), F.lit(k)))
     )
+    fsio.gated_write(out.write.mode("overwrite").partitionBy("bucket_date")).parquet(tier_dir)
+    elapsed = time.monotonic() - t0
     manifest = {
         "fingerprint": fingerprint,
-        "rows": out_rows,
-        "bytes": nbytes,
+        "rows": obs.get["rows"],
+        "bytes": sum(
+            sz for p, sz in fsio.walk_files(spark, tier_dir) if p.endswith(".parquet")
+        ),
         "seconds": round(elapsed, 3),
     }
     fsio.write_side_json_atomic(spark, tier_dir, MANIFEST, manifest)
@@ -187,11 +136,9 @@ def materialize_cascade(
     results: dict[str, dict] = {}
     upstream = tv
     specs = [("1min", "minute", True), ("1h", "hour", False), ("1d", "day", False)]
-    from aisdb_spark.streaming import fsio
-
     for name, unit, from_raw in specs:
         tier_dir = fsio.join(base_dir, name)
-        existing = _read_manifest(tier_dir)
+        existing = fsio.read_side_json(fsio.session_for(tier_dir), tier_dir, MANIFEST)
         if not force and existing and existing.get("fingerprint") == fp:
             results[name] = {**existing, "skipped": True}
             upstream = spark.read.parquet(tier_dir).drop("bucket_date")

@@ -26,67 +26,43 @@ Both record what they did into the tier's ``_maintenance.json`` ledger
 are explicit arguments (never wall-clock) so runs are deterministic and
 testable.
 
-Tiers addressed by URI (file://, hdfs://, s3a://) are supported since
-round 5: listing, partition drops, stats, and the ledger ride the Hadoop
-FileSystem client via ``streaming.fsio`` (an active SparkSession is
-required for those paths); plain local paths keep the ``os`` fast path.
+Every listing, partition drop, stat and ledger write goes through
+``streaming.fsio`` with ``fsio.session_for(path)``, so a tier addressed by
+URI (file://, hdfs://, s3a://) takes the same code path as a plain one
+(an active SparkSession is required for URI paths), and the ledger is
+written tmp + rename. A day is rewritten in place only through the
+journaled swap of ``streaming.txn``: compaction commits each packed day
+with ``txn.swap_commit``, and both entry points run ``txn.recover``
+first, so a crashed rewrite rolls back instead of losing the day, and a
+dropped day cannot come back from a crashed swap's backups. Run
+maintenance while no writer is committing to the tier: ``txn.recover``
+rolls back any swap that has not committed, an in-flight one included.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import math
-import os
-import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from aisdb_spark.streaming import fsio, txn
 
 LEDGER = "_maintenance.json"
 
 
-def _spark_for(tier_dir: str):
-    """Active session handle for Hadoop-FS paths (retention/ledger IO on
-    hdfs:// / s3a:// tiers rides the JVM FileSystem client via
-    streaming.fsio, same as the streaming upserts since round 5); plain
-    local paths never touch the JVM."""
-    from aisdb_spark.streaming import fsio
-
-    return fsio.session_for(tier_dir)
-
-
 def _append_ledger(tier_dir: str, entry: dict) -> None:
-    spark = _spark_for(tier_dir)
-    if spark is not None:
-        from aisdb_spark.streaming import fsio
-
-        log = fsio.read_side_json(spark, tier_dir, LEDGER) or []
-        log.append(entry)
-        fsio.write_side_json_atomic(spark, tier_dir, LEDGER, log)
-        return
-    path = os.path.join(tier_dir, LEDGER)
-    log = []
-    if os.path.exists(path):
-        with open(path) as f:
-            log = json.load(f)
+    spark = fsio.session_for(tier_dir)
+    log = fsio.read_side_json(spark, tier_dir, LEDGER) or []
     log.append(entry)
-    with open(path, "w") as f:
-        json.dump(log, f, indent=1)
+    fsio.write_side_json_atomic(spark, tier_dir, LEDGER, log)
 
 
 def _date_partitions(tier_dir: str) -> list[tuple[_dt.date, str]]:
-    spark = _spark_for(tier_dir)
-    if spark is not None:
-        from aisdb_spark.streaming import fsio
-
-        names = [n for n, _sz, is_dir in fsio.list_entries(spark, tier_dir) if is_dir]
-    elif os.path.isdir(tier_dir):
-        names = os.listdir(tier_dir)
-    else:
-        return []
+    entries = fsio.list_entries(fsio.session_for(tier_dir), tier_dir)
     out = []
-    for name in sorted(names):
+    for name in sorted(n for n, _sz, is_dir in entries if is_dir):
         if not name.startswith("bucket_date="):
             continue
         try:
@@ -105,22 +81,20 @@ def enforce_retention(
     ``cutoffs`` maps tier name → first date to KEEP. Returns the dropped
     partition dates per tier. No Spark job runs — directory removal only
     (the reference's monthly DROP TABLE; TimescaleDB ``drop_chunks``).
+    A crashed swap is settled first: its backups are renamed home or
+    deleted before the listing, never restored over a drop.
     """
     dropped: dict[str, list[str]] = {}
     for tier, cutoff in cutoffs.items():
         tdir = tier_dirs.get(tier)
         if tdir is None:
             continue
-        spark = _spark_for(tdir)
+        spark = fsio.session_for(tdir)
+        txn.recover(spark, tdir)
         gone = []
         for d, path in _date_partitions(tdir):
             if d < cutoff:
-                if spark is not None:
-                    from aisdb_spark.streaming import fsio
-
-                    fsio.delete_dir(spark, path)
-                else:
-                    shutil.rmtree(path)
+                fsio.delete_dir(spark, path)
                 gone.append(str(d))
         dropped[tier] = gone
         if gone:
@@ -136,22 +110,19 @@ def enforce_retention(
 
 
 def _partition_stats(path: str) -> tuple[int, int]:
-    spark = _spark_for(path)
-    if spark is not None:
-        from aisdb_spark.streaming import fsio
-
-        pq = [
-            (n, sz)
-            for n, sz, is_dir in fsio.list_entries(spark, path)
-            if not is_dir and n.endswith(".parquet")
-        ]
-        return len(pq), sum(sz for _n, sz in pq)
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
+    sizes = [
+        sz
+        for n, sz, is_dir in fsio.list_entries(fsio.session_for(path), path)
+        if not is_dir and n.endswith(".parquet")
     ]
-    return len(files), sum(os.path.getsize(f) for f in files)
+    return len(sizes), sum(sizes)
+
+
+def _content(df: DataFrame) -> tuple[int, int]:
+    """Row count + order-independent bit_xor(xxhash64) checksum."""
+    return tuple(df.agg(
+        F.count(F.lit(1)), F.bit_xor(F.xxhash64(*df.columns))
+    ).collect()[0])
 
 
 def compact_tier(
@@ -164,12 +135,15 @@ def compact_tier(
 
     A partition is rewritten when its file count exceeds both
     ``min_files_to_compact`` and the ideal count ``ceil(bytes/target)``.
-    The rewrite reads one day directory, coalesces to the ideal count, and
-    overwrites that directory only (lineage truncated via localCheckpoint
-    so the write never reads its own target). Content preservation is
-    asserted with a row count + order-independent bit_xor(xxhash64) checksum before/after —
-    a corrupted rewrite raises before anything is committed to the ledger.
+    The rewrite reads one day directory, coalesces to the ideal count
+    (lineage truncated via localCheckpoint), and commits that day alone
+    through ``txn.swap_commit``: the old files are renamed into the swap's
+    backup before the write, so a failed write leaves a journal that the
+    next run's ``txn.recover`` rolls back to the fragmented day. Content
+    preservation is asserted with ``_content`` before/after — a corrupted
+    rewrite raises before anything is committed to the ledger.
     """
+    txn.recover(spark, tier_dir)
     actions = []
     for d, path in _date_partitions(tier_dir):
         n_files, nbytes = _partition_stats(path)
@@ -177,28 +151,19 @@ def compact_tier(
         if n_files <= max(min_files_to_compact, ideal):
             continue
         df = spark.read.parquet(path)
-        before = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*df.columns)).alias("chk"),
-        ).collect()[0]
+        before = _content(df)
         packed = df.coalesce(ideal).localCheckpoint(eager=True)
-        packed.write.mode("overwrite").parquet(path)
-        after_df = spark.read.parquet(path)
-        after = after_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*after_df.columns)).alias("chk"),
-        ).collect()[0]
-        if (before["n"], before["chk"]) != (after["n"], after["chk"]):
+        txn.swap_commit(spark, tier_dir, packed.withColumn("bucket_date", F.lit(d)), [d])
+        after = _content(spark.read.parquet(path))
+        if before != after:
             raise RuntimeError(
-                f"compaction checksum mismatch in {path}: "
-                f"{tuple(before)} -> {tuple(after)}"
+                f"compaction checksum mismatch in {path}: {before} -> {after}"
             )
-        new_files, _ = _partition_stats(path)
         actions.append(
             {
                 "partition": str(d),
                 "files_before": n_files,
-                "files_after": new_files,
+                "files_after": _partition_stats(path)[0],
                 "bytes": nbytes,
             }
         )

@@ -9,7 +9,6 @@ driver's compare sorts columns by name before hashing).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from functools import partial
 
@@ -24,6 +23,7 @@ from aisdb_spark.sources.transcripts import (
     load_transcripts,
     with_value,
 )
+from aisdb_spark.streaming import fsio
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -72,23 +72,8 @@ _UNCACHEABLE = {
 }
 
 
-def _input_fingerprint(sf_dir: str) -> tuple | None:
-    """(relative path, size, mtime_ns, inode) of every file under a local
-    ``sf_dir``; None when it is no local directory."""
-    root = sf_dir.removeprefix("file:")
-    if not os.path.isdir(root):
-        return None
-    out = []
-    for d, _, files in os.walk(root):
-        for f in files:
-            path = os.path.join(d, f)
-            st = os.stat(path)
-            out.append((os.path.relpath(path, root), st.st_size, st.st_mtime_ns, st.st_ino))
-    return tuple(sorted(out))
-
-
 def _cached_plan(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    fp = _input_fingerprint(sf_dir)
+    fp = fsio.local_tree_stat(sf_dir)
     if fp is None:
         return build(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir, name)
@@ -1803,7 +1788,6 @@ def late_upsert_1min_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental merge converges to the batch answer."""
     from pyspark.sql import types as T
 
-    from aisdb_spark.streaming import fsio
     from aisdb_spark.streaming import upsert as ups
 
     tv = _tv(spark, sf_dir).select("conv_id", "turn_idx", "ts", "value")
@@ -1841,7 +1825,7 @@ def streaming_ewma_03_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered by tests/test_stateful_stream.py (≤1e-9 IEEE drift bound)."""
     from pyspark.sql import types as T
 
-    from aisdb_spark.streaming import fsio, stateful
+    from aisdb_spark.streaming import stateful
 
     tv = _tv(spark, sf_dir).select("conv_id", "turn_idx", "ts", "value")
     base = fsio.scratch_dir("spark_sewma_")
@@ -1884,7 +1868,6 @@ def retention_compaction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions and compaction changed no row anywhere."""
     from aisdb_spark import checkpoint, maintenance
     from aisdb_spark.operators import rollup
-    from aisdb_spark.streaming import fsio
 
     tv = _tv(spark, sf_dir)
     base = fsio.scratch_dir("spark_maint_")
@@ -1951,7 +1934,6 @@ def csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zipfile
 
     from aisdb_spark.sources import io as sio
-    from aisdb_spark.streaming import fsio
 
     t = load_transcripts(spark, sf_dir)
     half = F.pmod(F.xxhash64("conv_id"), F.lit(2))

@@ -13,18 +13,22 @@ Re-expresses the reference's ingest periphery:
   md5 of the first 1000 bytes ↦ ``hashmap`` table, skip seen files) →
   JSON ledger keyed the same way; the batch-idempotence companion to the
   tier manifests in ``checkpoint.py``.
+
+The checksum read and the ledger IO go through ``streaming.fsio`` with
+``fsio.session_for(path)``, so a plain path and a URI (file://, hdfs://,
+s3a://) take the same code path, and the ledger is written tmp + rename.
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aisdb_spark.schema import TRANSCRIPTS_SCHEMA
+from aisdb_spark.streaming import fsio
 
 # fixed export order + rounding, the tracks_csv discipline
 CSV_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -125,10 +129,9 @@ def file_checksum(path: str, head_bytes: int = 1000) -> str:
     (aisdb/database/decoder.py:56-63). Files on URI-addressed stores
     (file://, hdfs://, s3a://) are read through the Hadoop FS client —
     one ranged head read, never a full download."""
-    from aisdb_spark.streaming import fsio
-
-    spark = fsio.session_for(path)
-    return hashlib.md5(fsio.read_head(spark, path, head_bytes)).hexdigest()
+    return hashlib.md5(
+        fsio.read_head(fsio.session_for(path), path, head_bytes)
+    ).hexdigest()
 
 
 class IngestLedger:
@@ -150,22 +153,15 @@ class IngestLedger:
 
     def __init__(self, ledger_path: str):
         self.path = ledger_path
-        self._dir = ledger_path.rsplit("/", 1)[0] if "/" in ledger_path else "."
-        self._name = ledger_path.rsplit("/", 1)[-1]
+        self._dir = os.path.dirname(ledger_path) or "."
+        self._name = os.path.basename(ledger_path)
         self._checksums: dict[str, str] = {}  # path → md5-head memo
         self.seen: dict[str, str] = self._load()
 
     def _load(self) -> dict:
-        from aisdb_spark.streaming import fsio
-
-        spark = fsio.session_for(self.path)
-        if spark is not None:
-            return fsio.read_side_json(spark, self._dir, self._name) or {}
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
+        return fsio.read_side_json(
+            fsio.session_for(self.path), self._dir, self._name
+        ) or {}
 
     def _checksum(self, path: str) -> str:
         # memoized: filter_new and record hash the same heads, and on URI
@@ -178,20 +174,14 @@ class IngestLedger:
         return [p for p in paths if self.seen.get(self._checksum(p)) is None]
 
     def record(self, paths: list[str]) -> None:
-        from aisdb_spark.streaming import fsio
-
         merged = self._load()  # merge-on-write: keep other coordinators'
         merged.update(self.seen)  # entries recorded since our load
         for p in paths:
             merged[self._checksum(p)] = os.path.basename(p)
         self.seen = merged
-        spark = fsio.session_for(self.path)
-        if spark is not None:
-            fsio.write_side_json_atomic(spark, self._dir, self._name, merged)
-            return
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "w") as f:
-            json.dump(merged, f, indent=1)
+        fsio.write_side_json_atomic(
+            fsio.session_for(self.path), self._dir, self._name, merged
+        )
 
 
 def ingest_files(

@@ -1,15 +1,19 @@
 """Filesystem-agnostic tier side-file IO and partition cleanup.
 
 Tier directories can live on any Hadoop-visible filesystem — a plain
-local path, a ``file://`` URI, HDFS, S3A. Scheme-less paths take the
-``os``/``open`` fast path (no JVM roundtrip per micro-batch); any path
+local path, a ``file://`` URI, HDFS, S3A. This is the only module that
+branches on the path kind; every other module calls these helpers with
+``session_for(path)`` and never asks which kind it holds (the
+``tests/test_path_kind_guard.py`` check holds the rest of the package
+to that). Scheme-less paths take the ``os``/``open`` branch (no JVM
+roundtrip, and ``spark`` is never touched, so it may be None); any path
 carrying a URI scheme goes through the Hadoop ``FileSystem`` API via the
 active JVM gateway — the same client Spark's own writers use — so the
-streaming upserts are not silently local-fs-bound (round-4 verdict:
-``shutil.rmtree`` and ``open()`` are silent no-ops / failures on
-non-local URIs, leaving stale session partitions that dynamic overwrite
-cannot delete). The ``file://`` pytest drives the Hadoop branch
-end-to-end; remote stores use the identical API.
+tier writers are not silently local-fs-bound (``shutil.rmtree`` and
+``open()`` are silent no-ops / failures on non-local URIs, leaving stale
+partitions that dynamic overwrite cannot delete). The ``file://``
+pytests drive the Hadoop branch end-to-end; remote stores use the
+identical API.
 
 Atomicity note: the small-file write is tmp + rename. ``os.replace`` is
 atomic locally; Hadoop ``rename`` is atomic on HDFS but copy+delete on
@@ -114,11 +118,29 @@ def gated_write(writer):
     2.77 → 2.34 s; the win is per-file commit cost, so it grows with file
     count at scale). v2's weaker job-commit atomicity (visible partials on
     mid-job failure) is safe ONLY for writes whose visibility a higher
-    protocol decides — the ``txn.swap_commit`` journal and the
-    ``checkpoint.write_tier`` manifest — so those are the only callers; an
-    ungated write (CSV staging) keeps the session's v1 default.
+    protocol decides, so there are two callers: ``txn.swap_commit``,
+    whose journal gates every streaming tier commit and every
+    ``maintenance.compact_tier`` day rewrite, and ``checkpoint.write_tier``,
+    whose manifest gates the tier build. An ungated write (CSV staging)
+    keeps the session's v1 default.
     (Object-store deployments use their own committer.)"""
     return writer.option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+
+
+def local_tree_stat(path: str) -> tuple | None:
+    """(relative path, size, mtime_ns, inode) of every file under a local
+    directory ``path`` (plain or ``file:``), sorted; None when ``path`` is
+    no local directory. The query plan cache's input fingerprint."""
+    root = path.removeprefix("file:")
+    if not os.path.isdir(root):
+        return None
+    out = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            st = os.stat(p)
+            out.append((os.path.relpath(p, root), st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sorted(out))
 
 
 def read_side_json(spark: SparkSession, tier_dir: str, name: str):

@@ -49,6 +49,16 @@ under the same epoch, before the 1min swap — so the 1min epoch record is
 the one commit point of the whole cascade, and a replay re-swaps whole
 coarse days idempotently.
 
+Tier maintenance rewrites days in place through the same swap:
+``maintenance.compact_tier`` commits each bin-packed day with
+:func:`swap_commit` (``epoch_id=None``) after a :func:`recover`, so a
+failed rewrite rolls back to the fragmented day instead of losing it,
+and ``maintenance.enforce_retention`` runs :func:`recover` before it
+lists partitions, so a day it drops cannot come back from the backups.
+``checkpoint.write_tier`` stays on Spark's static overwrite: that
+overwrite deletes the whole tier directory, its manifest included, so a
+crashed build leaves no manifest and the rerun rebuilds the tier.
+
 Scale: the journal lists touched dates only (∝ batch, never table),
 the swap is rename-only, and recovery touches only journaled
 partitions. Reference parity: AISdb's tables absorb replayed inserts
@@ -207,6 +217,32 @@ def swap_commit(
 ROW_BYTES = 10
 
 
+def files_per_date(spark: SparkSession, rows: int, n_dates: int, old_bytes: int) -> int:
+    """The tier file-count rule: files per date for a day-partitioned write
+    of about ``rows`` rows over ``n_dates`` dates, ``old_bytes`` of them
+    already stored. Shared by :func:`merge_into_tier` and
+    ``checkpoint.write_tier`` (which passes ``old_bytes=0``).
+
+    Without clustering on (bucket_date, salt) every write task writes a
+    sliver into every date directory — file count ∝ parallelism × dates
+    (measured 1,920 files per micro-batch at 32 partitions × 30 dates,
+    4-16 s to write and as long again to read back). With it, file count
+    is at most dates × k. k is SIZE-derived (guide §6), in three terms,
+    floor 1:
+
+    - write parallelism: ~250k rows per write task, capped at 2×cores — a
+      10k-row micro-batch writes ONE file per date (commit cost ∝ file
+      count; a parallelism-only 2×cores rule wrote 3× the files), while a
+      20M-row merge keeps ~2×cores write tasks (a dates-only task count
+      regressed that case 87→131 s at the 20M drain: ~30 tasks from 30
+      hash keys collide into stragglers, guide §2.5);
+    - file sizing: ~1M rows, and ~512 MB of pre-existing partition bytes,
+      per file per date."""
+    desired_tasks = min(-(-rows // 250_000), 2 * spark.sparkContext.defaultParallelism)
+    return max(1, -(-desired_tasks // n_dates), -(-rows // (1_000_000 * n_dates)),
+               -(-old_bytes // (512 * 1024 * 1024 * n_dates)))
+
+
 def merge_into_tier(
     spark: SparkSession,
     tier_dir: str,
@@ -277,31 +313,12 @@ def merge_into_tier(
             parts = spark.read.schema(parts.schema).option("basePath", tier_dir).parquet(
                 *[f"{tier_dir}/bucket_date={d}" for d, entries in listed.items() if entries]
             ).unionByName(parts)
-        # The file-count rule. Without clustering on (bucket_date, salt)
-        # every write task writes a sliver into every date directory — file
-        # count ∝ parallelism × dates (measured 1,920 files per micro-batch
-        # at 32 partitions × 30 dates, 4-16 s to write and as long again to
-        # read back). With it, file count is at most dates × k — the same
-        # bucketed layout rule as checkpoint.write_tier. k is SIZE-derived
-        # (guide §6) from the new rows plus the existing rows of the read
-        # days (estimated from their bytes), in three terms, floor 1:
-        # - write parallelism: ~250k rows per write task, capped at 2×cores —
-        #   a 10k-row micro-batch writes ONE file per date (commit cost ∝
-        #   file count; a parallelism-only 2×cores rule wrote 3× the files),
-        #   while a 20M-row merge keeps ~2×cores write tasks (a dates-only
-        #   task count regressed that case 87→131 s at the 20M drain: ~30
-        #   tasks from 30 hash keys collide into stragglers, guide §2.5);
-        # - file sizing: ~512 MB of pre-existing partition bytes, and ~1M
-        #   rows, per file per date.
-        # The salt hashes the merge key, so rows that merge share it and a
-        # task retry reproduces the same placement.
         n_dates = len(read_dates)
         old_bytes = sum(sz for entries in listed.values() for _n, sz, _d in entries)
-        rows = batch["rows"] + old_bytes // ROW_BYTES
-        desired_tasks = min(-(-rows // 250_000), 2 * spark.sparkContext.defaultParallelism)
-        k = max(1, -(-desired_tasks // n_dates), -(-rows // (1_000_000 * n_dates)),
-                -(-old_bytes // (512 * 1024 * 1024 * n_dates)))
+        k = files_per_date(spark, batch["rows"] + old_bytes // ROW_BYTES, n_dates, old_bytes)
 
+        # the salt hashes the merge key, so rows that merge share it and a
+        # task retry reproduces the same placement
         def cluster(df: DataFrame, *key: str) -> DataFrame:
             if key:
                 df = df.withColumn("salt", F.pmod(F.xxhash64(*key), F.lit(k)))

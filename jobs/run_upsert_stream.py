@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 
 
 def main() -> None:
@@ -43,6 +42,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from aisdb_spark.sources.normalize import read_parquet_stream
+    from aisdb_spark.streaming import fsio
     from aisdb_spark.streaming import upsert as ups
 
     schema = T.StructType(
@@ -53,8 +53,8 @@ def main() -> None:
             T.StructField("value", T.LongType()),
         ]
     )
-    tier_1min = os.path.join(args.tiers, "1min")
-    coarser = {t: os.path.join(args.tiers, t) for t in ("1h", "1d")}
+    tier_1min = fsio.join(args.tiers, "1min")
+    coarser = {t: fsio.join(args.tiers, t) for t in ("1h", "1d")}
 
     src = read_parquet_stream(
         spark, args.landing, schema, args.glob, recursive=True
@@ -77,7 +77,7 @@ def main() -> None:
         q.awaitTermination()
         rows = (
             spark.read.parquet(tier_1min).count()
-            if os.path.isdir(tier_1min)
+            if fsio.tier_nonempty(spark, tier_1min)
             else 0
         )
         print(

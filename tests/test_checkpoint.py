@@ -4,6 +4,7 @@ equivalence and group capping."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -24,6 +25,13 @@ def test_cascade_materialize_and_resume(spark, synth, tmp_path):
     first = checkpoint.materialize_cascade(spark, tv, base)
     assert set(first) == {"1min", "1h", "1d"}
     assert all(not m.get("skipped") for m in first.values())
+    # at fixture size the file-count rule gives one parquet file per day
+    for tier in first:
+        days = [d for d in os.listdir(f"{base}/{tier}") if d.startswith("bucket_date=")]
+        assert days
+        for d in days:
+            files = os.listdir(f"{base}/{tier}/{d}")
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, (tier, d, files)
 
     # second run with identical input: all tiers skipped, nothing rewritten
     second = checkpoint.materialize_cascade(spark, tv, base)

@@ -130,3 +130,73 @@ def test_retention_and_compaction_on_file_uri(spark, tmp_path):
     assert [e["action"] for e in ledger] == ["compact", "retention_drop"]
     # rows outside the dropped partition survived intact
     assert spark.read.parquet(tier).count() == 20
+
+
+def test_compaction_crash_rolls_back_on_rerun(spark, tmp_path):
+    """A compaction whose write fails after Spark cleared its target must
+    lose no row: the day was renamed into the swap's backup first, and
+    the next run's recover puts it back before compacting again."""
+    import pytest
+
+    _, base = _cascade(spark, tmp_path)
+    tier = os.path.join(base, "1min")
+    _d0, p0 = maintenance._date_partitions(tier)[0]
+    frag = spark.read.parquet(p0).repartition(16).localCheckpoint(eager=True)
+    frag.write.mode("overwrite").parquet(p0)
+    before = sorted(map(tuple, spark.read.parquet(tier).collect()))
+    # an abstract committer class: the write job fails to instantiate it
+    key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, "org.apache.hadoop.mapreduce.OutputCommitter")
+    try:
+        with pytest.raises(Exception, match="InstantiationException"):
+            maintenance.compact_tier(spark, tier, target_bytes=1 << 30)
+    finally:
+        spark.conf.unset(key)
+    report = maintenance.compact_tier(spark, tier, target_bytes=1 << 30)
+    after = sorted(map(tuple, spark.read.parquet(tier).collect()))
+    assert (len(after), after == before) == (len(before), True)
+    assert report["compacted"] == 1
+    assert maintenance._partition_stats(p0)[0] == 1
+
+
+def test_retention_after_crashed_swap_settles_it_first(spark, tmp_path, monkeypatch):
+    """A streaming upsert crashed at the crash matrix's ``backup`` point
+    leaves a journal and a backed-up day. Retention must settle that swap
+    before it lists partitions: afterwards no journal or backup is left,
+    and a later recover brings back no dropped day."""
+    import pytest
+
+    from aisdb_spark.streaming import fsio, txn, upsert
+
+    tier = str(tmp_path / "1min")
+    d1, d2 = dt.date(2025, 3, 1), dt.date(2025, 3, 2)
+    turns = spark.createDataFrame(
+        [
+            ("a", 0, dt.datetime(2025, 3, 1, 10), 1.0, 0),
+            ("a", 1, dt.datetime(2025, 3, 2, 10), 2.0, 0),
+            ("b", 0, dt.datetime(2025, 3, 1, 11), 3.0, 1),
+        ],
+        "conv_id string, turn_idx int, ts timestamp, value double, wave int",
+    )
+    upsert.upsert_batch(spark, turns.filter("wave = 0"), tier, epoch_id=0)
+    real_rename = fsio.rename
+
+    def crash_after_first_rename(s, src, dst):
+        out = real_rename(s, src, dst)
+        if dst.startswith(f"{tier}/{txn.BACKUP}/"):
+            raise RuntimeError("injected crash mid-backup")
+        return out
+
+    monkeypatch.setattr(fsio, "rename", crash_after_first_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert.upsert_batch(spark, turns.filter("wave = 1"), tier, epoch_id=1)
+    monkeypatch.undo()
+    assert os.path.exists(f"{tier}/{txn.JOURNAL}")  # the crashed swap
+
+    dropped = maintenance.enforce_retention({"1min": tier}, {"1min": d2})
+    assert dropped["1min"] == [str(d1)]
+    assert not os.path.exists(f"{tier}/{txn.JOURNAL}")
+    assert not os.path.exists(f"{tier}/{txn.BACKUP}")
+    txn.recover(spark, tier)
+    assert [d for d, _ in maintenance._date_partitions(tier)] == [d2]
+    assert spark.read.parquet(tier).count() == 1

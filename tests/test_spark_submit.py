@@ -12,6 +12,8 @@ import pyspark
 from aisdb_spark.dist import package_zip
 from tests.conftest import SF_SMALL
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_spark_submit_py_files(tmp_path):
     spark_submit = os.path.join(
@@ -39,7 +41,7 @@ def test_spark_submit_py_files(tmp_path):
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=ROOT,
         env=env,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -103,7 +105,7 @@ def test_spark_submit_upsert_stream(spark, tmp_path):
                 "--checkpoint", ck,
                 "--once",
             ],
-            capture_output=True, text=True, timeout=420, cwd="/root/repo",
+            capture_output=True, text=True, timeout=420, cwd=ROOT,
             env=env,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
@@ -125,3 +127,43 @@ def test_spark_submit_upsert_stream(spark, tmp_path):
     got_1d = spark.read.parquet(f"{tiers}/1d").select(*exp_1d.columns)
     assert got_1d.exceptAll(exp_1d).count() == 0
     assert exp_1d.exceptAll(got_1d).count() == 0
+
+
+def test_upsert_stream_once_counts_uri_tier(spark, tmp_path):
+    """``--once`` against a ``file://`` tiers root reports the rows it
+    wrote: the count checks the tier through fsio, which resolves the
+    URI, not through a local-directory test that reads 0 on any URI."""
+    from pyspark.sql import functions as F
+
+    from aisdb_spark.sources.transcripts import load_transcripts, with_value
+
+    spark_submit = os.path.join(
+        os.path.dirname(pyspark.__file__), "bin", "spark-submit"
+    )
+    zip_path = package_zip(str(tmp_path / "aisdb_spark.zip"))
+    landing = str(tmp_path / "landing")
+    tv = with_value(load_transcripts(spark, SF_SMALL)).select(
+        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "ts", "value"
+    )
+    tv.coalesce(1).write.parquet(f"{landing}/w1")  # one landing file
+    env = dict(os.environ, SPARK_GRAFT_LOCAL_DIR="/dev/shm/spark-local-upsert-uri")
+    proc = subprocess.run(
+        [
+            spark_submit,
+            "--master", "local[2]",
+            "--conf", "spark.sql.shuffle.partitions=4",
+            "--conf", "spark.sql.session.timeZone=UTC",
+            "--conf", "spark.ui.enabled=false",
+            "--py-files", zip_path,
+            "jobs/run_upsert_stream.py",
+            "--landing", landing,
+            "--tiers", f"file://{tmp_path}/tiers",
+            "--checkpoint", str(tmp_path / "ck"),
+            "--once",
+        ],
+        capture_output=True, text=True, timeout=420, cwd=ROOT, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["batches"] == 1
+    assert result["tier_1min_rows"] == spark.read.parquet(f"{tmp_path}/tiers/1min").count() > 0
